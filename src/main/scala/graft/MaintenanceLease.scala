@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Mechanical enforcement of the single-maintenance-writer deployment
   * contract (Compaction scaladoc): every maintenance/edit writer — cell
@@ -107,7 +108,7 @@ private[graft] class LeaseArbiter {
       val in = fs.open(path)
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
-    } catch { case _: Throwable => "<unreadable>" }
+    } catch { case NonFatal(_) => "<unreadable>" }
 
   /** [[readHolder]] with brief retries on a transiently unreadable file —
     * every ownership decision (acquire verify, keepalive refresh, release
@@ -161,9 +162,9 @@ private[graft] class LeaseArbiter {
                     // released while we stalled stays gone — fall back to
                     // the slow ttl/3 poll instead of hot-retrying the FS
                     // for the rest of a possibly hours-long job
-                    try !h.fs.exists(h.path) catch { case _: Throwable => false }
+                    try !h.fs.exists(h.path) catch { case NonFatal(_) => false }
                   case _ => true // a CONCRETE other holder: not ours to refresh
-                } catch { case _: Throwable => false }
+                } catch { case NonFatal(_) => false }
               // a transient FS error must not count as a touch — two in a
               // row at ttl/3 cadence would age a LIVE lease past its TTL;
               // retry soon instead, clamped so the retry always lands well
@@ -259,7 +260,7 @@ private[graft] class LeaseArbiter {
       // the double verify: the interleave it catches is a double-held scope
       val doubleVerify =
         !Set("hdfs", "viewfs").contains(
-          try fs.getScheme catch { case _: Throwable => "file" })
+          try fs.getScheme catch { case NonFatal(_) => "file" })
       def verifyOurs(created: Boolean): Boolean = {
         var attempt = 0
         val passes = if (doubleVerify) 2 else 1
@@ -274,7 +275,7 @@ private[graft] class LeaseArbiter {
             // re-contend. Only a file that EXISTS but stays unreadable is
             // the fail-loud case — guessing ownership there could strand
             // or double-hold the scope.
-            val absent = try !fs.exists(path) catch { case _: Throwable => false }
+            val absent = try !fs.exists(path) catch { case NonFatal(_) => false }
             if (absent) return false
             throw new IllegalStateException(
               s"lease file $path was created by this writer but stays unreadable — " +
@@ -298,7 +299,7 @@ private[graft] class LeaseArbiter {
       // the rare no-hardlink mount that falls back to hadoopCreate).
       def createExclusive(): Boolean =
         if (!linkPublishEnabled ||
-            (try fs.getScheme catch { case _: Throwable => "file" }) != "file")
+            (try fs.getScheme catch { case NonFatal(_) => "file" }) != "file")
           hadoopCreate()
         else try {
           val nioDir = java.nio.file.Paths.get(path.getParent.toUri)
@@ -318,7 +319,7 @@ private[graft] class LeaseArbiter {
           // rejects, ...) degrades to the non-atomic create path — still
           // guarded by the delayed double verify — rather than wedging
           // every acquisition for the scope
-          case scala.util.control.NonFatal(_) => hadoopCreate()
+          case NonFatal(_) => hadoopCreate()
         }
       var acquired = false
       while (!acquired) {
@@ -355,7 +356,7 @@ private[graft] class LeaseArbiter {
         // transient blip (or a waiter's momentary rename-aside) would leave
         // an ownerless lease blocking the scope for the full TTL
         try if (readHolderRetrying(fs, path) == holder) fs.delete(path, false)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     } finally jl.unlock()
   }

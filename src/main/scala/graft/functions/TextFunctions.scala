@@ -13,6 +13,20 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
+  /** `lower()` as far as ASCII letters and digits can tell: A–Z and the
+    * Kelvin sign U+212A become a–z and k, and U+0130 becomes "i̇" (i plus
+    * combining dot U+0307), exactly as ICU's root-locale lower case maps
+    * them. Every other code point keeps its case. No other code point's
+    * lower case contains [a-z0-9] or any other ASCII character, so
+    * [a-z0-9] tokens and matches of ASCII substrings come out as under
+    * `lower()` (TextSearchSpec checks every code point). Spark's `lower()`
+    * runs through ICU case mapping, whose one-time class initialisation
+    * made a session's first `lower()` take 1.8 s against 0.17 s for the
+    * next (sf0.01 documents, 4-core VM); this fold never loads it. */
+  def foldCase(c: Column): Column =
+    translate(replace(c, lit("\u0130"), lit("i\u0307")),
+      "ABCDEFGHIJKLMNOPQRSTUVWXYZ\u212A", "abcdefghijklmnopqrstuvwxyzk")
+
   /** Python-`str.strip()`: ALL whitespace, both ends (Spark's `trim` only
     * strips spaces — a newline at either end would skew counts). */
   def pyStrip(c: Column): Column = regexp_replace(c, "^\\s+|\\s+$", "")
@@ -68,7 +82,7 @@ object TextFunctions {
       size(sentences).cast("double")
     val readabilityTerm = lit(0.2) * greatest(lit(0.0), lit(1.0) - abs(avgSentenceLen - 17.0) / 17.0)
 
-    val urlLower = lower(url)
+    val urlLower = foldCase(url)
     val credible = Seq("yahoo", "org", "realmadrid", "psg", "inter", "porto", "benfica",
       "apple", "ai", "nvidia", "google", "microsoft", "amazon", "meta")
     val isCredible   = credible.map(d => urlLower.contains(d)).reduce(_ || _)
@@ -157,7 +171,7 @@ object TextFunctions {
   /** X2 intent classification (advanced_search.py:125-146): first-match
     * bucket over keyword substring lists. */
   def queryIntent(c: Column): Column = {
-    val q = lower(c)
+    val q = foldCase(c)
     def anyOf(terms: Seq[String]): Column = terms.map(t => q.contains(t)).reduce(_ || _)
     when(anyOf(Seq("api", "code", "function", "class", "implement")), "technical")
       .when(anyOf(Seq("how to", "how do", "steps", "tutorial")), "how-to")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
 /** Full-text relevance search (SURVEY.md §2.7 X1).
   *
@@ -9,22 +10,36 @@ import org.apache.spark.sql.functions._
   * BM25 over `content`, lucene.standard analyzer —
   * /root/reference/src/feature_pipeline/vector_storage/index_manager.py:139-152,
   * vector_search.py:143-159). Here BM25 is computed natively as a DataFrame
-  * program: tokenize → explode → term/document frequencies → per-(doc,term)
-  * BM25 → sum per doc. Every step is a hash aggregate or broadcast join —
-  * the doc-frequency side is |query terms| rows, always broadcastable; the
-  * only corpus-wide shuffle is the final per-doc sum, keyed on doc id.
+  * program in one pass over the corpus: each document is analyzed once into
+  * its length and the frequency of every query term; one aggregate keyed on
+  * the doc id keeps a row per matching document and folds every other
+  * document into a single null-keyed row on the map side; one global
+  * aggregate over that small result gives N, avgdl and every df, and is
+  * joined back onto the matching rows for scoring. Both consumers read the
+  * same shuffle (Spark reuses the exchange), so the analyzer — the stemmed
+  * UDF included — runs exactly once per document.
   *
-  * Determinism: per-doc term-score sums go through exact DECIMAL(38,12)
-  * accumulation so results are partition-order independent (and DuckDB-
-  * comparable bit for bit).
+  * Determinism: per-doc term-score sums go through exact decimal
+  * accumulation at scale 12 so results are partition-order independent (and
+  * DuckDB-comparable bit for bit).
   *
-  * Cache contract: `bm25` persists one small per-doc table (the lean
-  * lengths for the standard analyzer; the token arrays for a caller-
-  * supplied analyzer, so an expensive analyzer runs once, not twice),
-  * tracked in [[graft.Caches]] —
-  * call `graft.Caches.release()` once the returned plan is materialized to
-  * unpersist exactly the library's caches (Bench/Verify use the blunter
-  * `clearCache()` between queries).
+  * Cache contract: none. `bm25`/`search` persist nothing and leave
+  * [[graft.Caches]] untouched. Measured on the `serve` benchmark corpus
+  * (≈2.2k chunks, 4 cores): the earlier form analyzed the corpus twice and
+  * persisted a doc-length table on every call, 11 Spark jobs for a warm
+  * `search`; this form runs 3 (TextSearchSpec holds it to at most 4).
+  * Caching corpus state across calls would not pay: `TableStore` refreshes
+  * a stored table on every read, which drops every cache built over it.
+  *
+  * Case folding: [[tokens]] folds case with
+  * [[graft.functions.TextFunctions.foldCase]], not `lower()`. Spark's
+  * `lower()` goes through ICU case mapping, whose one-time class
+  * initialisation stalls the first tokenizing query of a session by about
+  * 1.6 s (4-core VM); the fold gives the same tokens (TextSearchSpec checks
+  * every code point). Turning ICU off session-wide
+  * (`spark.sql.icu.caseMappings.enabled=false`) would avoid the stall too,
+  * but makes non-ASCII lower-casing follow the JVM's default locale, so
+  * results would depend on process-wide state.
   */
 object TextSearch {
 
@@ -46,13 +61,9 @@ object TextSearch {
     * pass their own analyzer Column function to [[bm25]]/[[search]] — the
     * scoring math is analyzer-agnostic. */
   def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => length(t) > 0)
+    array_remove(split(TextFunctions.foldCase(c), "[^a-z0-9]+"), "")
 
-  /** [[tokens]] as a stable function VALUE — [[bm25]] decides by reference
-    * identity whether caching the per-doc token arrays is worth it (see
-    * the note there). Callers passing `tokens _` themselves get the
-    * cache-the-arrays treatment, which is safe, just not optimal for a
-    * pure-codegen analyzer. */
+  /** [[tokens]] as a function value: the default analyzer of [[bm25]]. */
   val standardTokens: Column => Column = tokens
 
   /** Porter-stemmed analyzer — the third pluggable option (standard regex /
@@ -81,9 +92,7 @@ object TextSearch {
     * deduplicated terms (query terms must come from the same analyzer that
     * built the term table). */
   def stemQueryTerms(queryText: String): Seq[String] =
-    queryText.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty)
-      .map(graft.functions.PorterStemmer.stem).distinct.toSeq
+    Dedup.wordsScala(queryText).map(graft.functions.PorterStemmer.stem).distinct.toSeq
 
   /** Exploded (id, term) pairs for a corpus. */
   def termTable(docs: DataFrame, idCol: String, textCol: String,
@@ -93,74 +102,81 @@ object TextSearch {
   /** BM25 scores of `queryTerms` over a corpus; returns (idCol, text_score)
     * for docs matching ≥1 term, text_score rounded to 6 decimals.
     * `analyzer` swaps the tokenizer (see the [[tokens]] divergence note);
-    * query terms must come from the same analyzer. `cacheTokens` overrides
-    * the per-analyzer caching default below — pass `Some(false)` when
-    * supplying a codegen-cheap analyzer by value (e.g. `tokens _`, which is
-    * a fresh function object the identity dispatch cannot recognize), or
-    * `Some(true)` to force one analyzer pass regardless. Either branch
-    * computes identical scores; the choice is purely a cost trade. */
+    * query terms must come from the same analyzer; an empty term matches
+    * nothing. N and avgdl follow Lucene's docCount: every document counts,
+    * zero-token ones included. Doc ids are keys: each must name one
+    * document, and a document without an id counts in N and avgdl only. */
   def bm25(docs: DataFrame, queryTerms: Seq[String],
            idCol: String = "doc_id", textCol: String = "text",
-           analyzer: Column => Column = standardTokens,
-           cacheTokens: Option[Boolean] = None): DataFrame = {
-    // Analyzer-cost-aware evaluation. The per-doc lengths (stats + scoring
-    // join — Lucene docCount semantics: ALL documents count, including
-    // zero-token ones; deriving N/avgdl from the exploded term table would
-    // silently drop token-less docs and inflate every idf) and the term
-    // table both need the analyzed tokens. For a caller-supplied analyzer
-    // (e.g. the Porter-stem UDF) the tokens are computed ONCE and the
-    // arrays cached — a second analyzer pass is the dominant cost
-    // (measured: txt_bm25_stemmed 1.42 s → 1.24 s at sf0.1). For the
-    // standard codegen split, re-evaluating per consumer is CHEAPER than
-    // materializing fat deserialized string arrays into storage memory, so
-    // only the lean (id, length) table is cached — the pre-round shape.
-    val (docLen, terms) =
-      if (!cacheTokens.getOrElse(!(analyzer eq standardTokens))) {
-        (graft.Caches.persistTracked(docs
-           .select(col(idCol), size(analyzer(col(textCol))).cast("long").as("dl"))),
-         docs.select(col(idCol), explode(analyzer(col(textCol))).as("term")))
-      } else {
-        val toks = graft.Caches.persistTracked(docs
-          .select(col(idCol), analyzer(col(textCol)).as("__toks")))
-        (toks.select(col(idCol), size(col("__toks")).cast("long").as("dl")),
-         toks.select(col(idCol), explode(col("__toks")).as("term")))
-      }
+           analyzer: Column => Column = standardTokens): DataFrame = {
+    // Spark compiles code for every new plan shape. The terms travel as one
+    // array literal, padded with "" to a power of two (at least 16) slots,
+    // so the shape depends on the slot count alone and queries of
+    // different lengths share one compiled plan. Counting runs over the
+    // non-empty tokens, so a pad never matches
+    val real = queryTerms.filter(_.nonEmpty).distinct
+    val slots = Iterator.iterate(16)(_ * 2).find(_ >= real.size).get
+    // one analyzer pass: the token array is its own projection, so the
+    // length and counts below read it instead of re-running the analyzer;
+    // only a doc holding a term gets counts (`__tfs` is null otherwise)
+    val terms = typedLit(real ++ Seq.fill(slots - real.size)(""))
+    val perDoc = docs.select(col(idCol), analyzer(col(textCol)).as("__toks"))
+      .select(col(idCol), size(col("__toks")).cast("long").as("__dl"),
+        array_remove(col("__toks"), "").as("__words"))
+      .select(col(idCol), col("__dl"),
+        when(arrays_overlap(col("__words"), terms), transform(terms, t =>
+          size(col("__words")) - size(array_remove(col("__words"), t)))).as("__tfs"))
+    // a doc with an id that holds a query term keeps a row of its own;
+    // every other doc folds into the null key map-side, so the shuffle
+    // carries only the matches
+    val matched = col(idCol).isNotNull && col("__tfs").isNotNull
+    // (one long per slot: an array-valued aggregate would need a sort)
+    val tf = (0 until slots).map(i => s"__tf$i")
+    val keyed = perDoc.groupBy(when(matched, col(idCol)).as(idCol))
+      .agg(count(lit(1)).as("__n"), max(matched).as("__m") +: sum(col("__dl")).as("__dl") +:
+        tf.indices.map(i => sum(col("__tfs")(i)).as(tf(i))): _*)
+    // N, avgdl and each term's df from the same shuffle. Both sides read
+    // every column of `keyed` and neither filters below it (`__m` is an
+    // aggregate, so a filter on it cannot be pushed under the shuffle the
+    // way one on the key would be), so Spark reuses its exchange and the
+    // corpus is analyzed once
+    val stats = keyed.agg(
+      sum(col("__n")).cast("double").as("__n_docs"),
+      (sum(col("__dl")).cast("double") / sum(col("__n"))).as("__avgdl"),
+      array(tf.map(c => count_if(col("__m") && col(c) > 0).cast("double")): _*).as("__dfs"))
 
-    // corpus stats: N docs, avg doc length (exact-decimal mean)
-    val stats = docLen.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      (sum(col("dl").cast("decimal(38,6)")).cast("double") / count(lit(1))).as("avgdl"))
+    // each term score rounds to scale 12 and the sum stays exact: a term
+    // scores below 2.2·ln(2N+2), so decimal(24,12) cannot overflow, and
+    // re-casting after each add keeps the scale that adding decimal(38,12)
+    // values would cut to 11
+    val Dec = "decimal(24,12)"
+    val termScores = zip_with(array(tf.map(col): _*), col("__dfs"), { (tf, df) =>
+      val f = tf.cast("double")
+      val idf = log((col("__n_docs") - df + 0.5) / (df + 0.5) + 1.0)
+      when(tf > 0, (idf * (f * (K1 + 1.0)) /
+        (f + lit(K1) * (lit(1.0) - lit(B) + lit(B) * col("__dl") / col("__avgdl"))))
+        .cast(Dec)).otherwise(lit(0).cast(Dec))
+    })
+    val exactSum = aggregate(termScores, lit(0).cast(Dec), (acc, x) => (acc + x).cast(Dec))
 
-    // per-(doc, query-term) term frequency
-    val tf = terms.filter(col("term").isin(queryTerms: _*))
-      .groupBy(col(idCol), col("term"))
-      .agg(count(lit(1)).cast("double").as("tf"))
-
-    // document frequency per query term (tiny — broadcast)
-    val df = tf.groupBy(col("term")).agg(count(lit(1)).cast("double").as("df"))
-
-    val idf = log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0)
-    val termScore = idf * (col("tf") * (K1 + 1.0)) /
-      (col("tf") + lit(K1) * (lit(1.0) - lit(B) + lit(B) * col("dl") / col("avgdl")))
-
-    tf.join(broadcast(df), "term")
-      .join(docLen, idCol)
-      .crossJoin(broadcast(stats))
-      .withColumn("term_score", termScore)
-      .groupBy(col(idCol))
-      .agg(round(sum(col("term_score").cast("decimal(38,12)")).cast("double"), 6)
-        .as("text_score"))
+    // A matching key names one document (the null key never matches), and
+    // doc ids are keys, so a key naming several documents fails loudly. The
+    // one stats row joins as a cartesian product: no broadcast, so no job
+    // of its own
+    keyed.filter(col("__m"))
+      .crossJoin(stats.hint("shuffle_replicate_nl"))
+      .select(col(idCol),
+        when(col("__n") === 1, round(exactSum.cast("double"), 6))
+          .otherwise(raise_error(concat(lit(s"bm25: $idCol "), col(idCol).cast("string"),
+            lit(" names more than one document"))))
+          .as("text_score"))
   }
 
   /** X1 search surface: BM25 top-k with deterministic tie-break — the
     * reference's `$search` + `$limit limit*2` stage shape. */
   def search(docs: DataFrame, queryText: String, limit: Int,
-             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // Locale.ROOT: must tokenize exactly like the Column-side lower()
-    val terms = queryText.toLowerCase(java.util.Locale.ROOT)
-      .split("[^a-z0-9]+").filter(_.nonEmpty).distinct.toSeq
-    bm25(docs, terms, idCol, textCol)
+             idCol: String = "doc_id", textCol: String = "text"): DataFrame =
+    bm25(docs, Dedup.wordsScala(queryText).distinct.toSeq, idCol, textCol)
       .orderBy(col("text_score").desc, col(idCol).asc)
       .limit(limit)
-  }
 }

@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.PorterStemmer
-import graft.operators.TextSearch
+import graft.functions.{PorterStemmer, TextFunctions}
+import graft.operators.{Dedup, Fusion, TextSearch}
 
 /** Validates the Porter-stemmed BM25 analyzer path (`txt_bm25_stemmed`):
   *
@@ -23,6 +23,10 @@ import graft.operators.TextSearch
   *     of the query terms, so stemmed and standard BM25 must agree on the
   *     match set and the top-10 — pinned here as overlap assertions (the
   *     exact values are pinned by GoldenSpec's txt_bm25_stemmed digest).
+  *  4. The one-pass BM25: the same scores however an analyzer is passed, a
+  *     caller-supplied analyzer run once per document, and a warm
+  *     `search` / `hybridSearch` held to 4 / 7 Spark jobs with no cache.
+  *  5. The ICU-free tokenizer against `lower()` on every code point.
   */
 class TextSearchSpec extends AnyFunSuite {
 
@@ -133,25 +137,83 @@ class TextSearchSpec extends AnyFunSuite {
     graft.Caches.release()
   }
 
-  test("bm25 scores are identical across every caching branch (tokens _, " +
-       "cacheTokens overrides) — the dispatch is a cost choice, never a result one") {
-    // `TextSearch.tokens _` eta-expands to a FRESH function object the
-    // reference-identity default cannot recognize as the standard analyzer
-    // (ADVICE r19): it takes the cache-the-arrays branch. Both branches and
-    // both explicit overrides must score identically.
+  test("bm25 scores are identical for every way of passing an analyzer") {
+    // one analyzer pass whatever the analyzer: the standard one by default,
+    // as the `standardTokens` value or eta-expanded (a fresh function
+    // object), and the stemmed one as its value or wrapped in a fresh one
     val docs = Tables.documents(spark, dir)
     val terms = Seq("spark", "join", "vector")
     def scores(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
       df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val viaDefault = scores(TextSearch.bm25(docs, terms))
-    val viaEta     = scores(TextSearch.bm25(docs, terms, analyzer = TextSearch.tokens _))
-    val viaForceOn  = scores(TextSearch.bm25(docs, terms, cacheTokens = Some(true)))
-    val viaForceOff = scores(TextSearch.bm25(docs, terms,
-      analyzer = TextSearch.tokens _, cacheTokens = Some(false)))
     assert(viaDefault.nonEmpty)
-    assert(viaEta === viaDefault)
-    assert(viaForceOn === viaDefault)
-    assert(viaForceOff === viaDefault)
-    graft.Caches.release()
+    assert(scores(TextSearch.bm25(docs, terms, analyzer = TextSearch.standardTokens)) ===
+      viaDefault)
+    assert(scores(TextSearch.bm25(docs, terms, analyzer = TextSearch.tokens _)) === viaDefault)
+    val stems = TextSearch.stemQueryTerms("spark join vector")
+    val viaStemmed = scores(TextSearch.bm25(docs, stems, analyzer = TextSearch.stemmedTokens))
+    assert(viaStemmed.nonEmpty)
+    assert(scores(TextSearch.bm25(docs, stems,
+      analyzer = c => TextSearch.stemmedTokens(c))) === viaStemmed)
+  }
+
+  test("bm25 runs a caller-supplied analyzer once per document") {
+    val docs = Tables.documents(spark, dir)
+    val calls = spark.sparkContext.longAccumulator("analyzer calls")
+    val counting = udf { (t: String) => calls.add(1); Dedup.wordsScala(t).toSeq }
+    val scored = TextSearch.bm25(docs, Seq("spark", "join", "vector"),
+      analyzer = c => counting(c)).collect()
+    assert(scored.nonEmpty)
+    assert(calls.value === docs.count())
+  }
+
+  test("tokens equal lower()-split tokens and Dedup.wordsScala on every code point") {
+    import spark.implicits._
+    // every Unicode scalar value alone, between ASCII letters, and either
+    // side of a capital sigma (final-sigma contexts for ICU's lower case)
+    val cps = spark.range(0, Character.MAX_CODE_POINT + 1)
+      .filter(!($"id" >= 0xD800 && $"id" <= 0xDFFF))
+    val str = udf((cp: Long) => new String(Character.toChars(cp.toInt)))
+    val contexts = Seq[Column => Column](
+      c => c, c => concat(lit("a"), c, lit("B")),
+      c => concat(lit("ΟΔΟΣ"), c), c => concat(c, lit("Σ")))
+    val strings = contexts.map(f => cps.select(f(str($"id")).as("s"))).reduce(_ union _)
+      .union(Seq("ΟΔΟΣ", "ΟΔΟΣ.", "Σ", "ΑΣΑ", "aΣ", "AΣ b", "İSTANBUL", "\u212Aelvin")
+        .toDF("s"))
+    val scala = udf((t: String) => Dedup.wordsScala(t).toSeq)
+    val ascii = (c: Column) => regexp_replace(c, "[^\\x00-\\x7F]+", "\uFFFD")
+    val icuTokens = filter(split(lower($"s"), "[^a-z0-9]+"), t => length(t) > 0)
+    val bad = strings.filter(
+      !(TextSearch.tokens($"s") <=> icuTokens) ||
+      !(TextSearch.tokens($"s") <=> scala($"s")) ||
+      !(TextFunctions.queryIntent($"s") <=> TextFunctions.queryIntent(lower($"s"))) ||
+      !(ascii(TextFunctions.foldCase($"s")) <=> ascii(lower($"s"))))
+      .select($"s").as[String].take(5)
+    assert(bad.isEmpty, bad.map(_.codePoints.toArray.map(Integer.toHexString).mkString(" "))
+      .mkString("mismatches: ", "; ", ""))
+  }
+
+  test("warm search runs at most 4 Spark jobs, hybridSearch at most 7, and neither caches") {
+    val docs = Tables.documents(spark, dir)
+    val corpusDir = java.nio.file.Files.createTempDirectory("graft_hybrid_corpus").toString
+    docs.join(Tables.embeddings(spark, dir), col("doc_id") === col("vec_id"))
+      .write.mode("overwrite").parquet(corpusDir)
+    val corpus = spark.read.parquet(corpusDir)
+    val qv = Tables.embeddings(spark, dir).filter(col("vec_id") === 0L)
+      .select("embedding").head().getSeq[Float](0).toArray
+    def jobs(body: => Unit): Seq[Int] = {
+      body // warm-up: plan caches, the first job of a kind
+      val caches = Caches.liveCount
+      val counts = Seq.fill(2)(org.apache.spark.JobCount.of(spark.sparkContext)(body))
+      assert(Caches.liveCount === caches)
+      counts
+    }
+    val (search, hybrid) =
+      try (jobs(TextSearch.search(corpus, "spark join vector", 10).collect()),
+           jobs(Fusion.hybridSearch(corpus, qv, "spark join vector", 10).collect()))
+      finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(corpusDir))
+    info(s"warm jobs: search $search, hybridSearch $hybrid")
+    assert(search.distinct.size === 1 && search.head <= 4, s"search jobs $search")
+    assert(hybrid.distinct.size === 1 && hybrid.head <= 7, s"hybrid jobs $hybrid")
   }
 }
