@@ -37,10 +37,12 @@ object Caches {
     d
   }
 
-  /** Unpersist every live graft-created cache (non-blocking). */
+  /** Unpersist every live graft-created cache (non-blocking) and empty the
+    * [[IndexMeta]] memo of decoded index metadata. */
   def release(): Unit = synchronized {
     live.foreach(d => d.unpersist(false))
     live.clear()
+    IndexMeta.clear()
   }
 
   /** Registry size — the leak observable: a loop-shaped operator (an

@@ -122,6 +122,13 @@ object IvfCatalog {
     Similarity.hashSeededCentroids(ChunkCatalog.flatChunks(spark, dir),
       centroids, idCol = "chunk_id", embCol = "embedding")
 
+  /** Catalog table name of the frozen chunk-store centroid table — public
+    * so the blue/green reindex ([[Reindex]]) can stage/rename it. */
+  def chunkCentroidsName(dir: String, centroids: Int, trained: Boolean = false): String = {
+    val suffix = if (trained) s"k$centroids" else s"$centroids"
+    TableStore.tableName(s"ivfchunkcent$suffix", dir)
+  }
+
   /** The chunk-store centroids FROZEN as a table at index build. The index
     * is only meaningful against the exact centroids that assigned it (same
     * contract as the trained vector store): once [[appendChunks]] can grow
@@ -133,14 +140,12 @@ object IvfCatalog {
     * `trained = true` runs bounded-sample k-means over the chunk embeddings
     * (the vector store's production mode, same recall argument) instead of
     * the hash-ordered sample; the registered `pipe_flagship_ivf` stays on
-    * the seeded mode, whose golden pin is replayable without MLlib. */
-  /** Catalog table name of the frozen chunk-store centroid table — public
-    * so the blue/green reindex ([[Reindex]]) can stage/rename it. */
-  def chunkCentroidsName(dir: String, centroids: Int, trained: Boolean = false): String = {
-    val suffix = if (trained) s"k$centroids" else s"$centroids"
-    TableStore.tableName(s"ivfchunkcent$suffix", dir)
-  }
-
+    * the seeded mode, whose golden pin is replayable without MLlib.
+    *
+    * The returned frame is a bare catalog table, so the probes, assignment
+    * and celled kernels that take it read its rows into driver arrays once
+    * per listed file set ([[IndexMeta]]); a rewrite, rebuild or generation
+    * flip is re-read, and [[Caches.release]] empties the memo. */
   def chunkCentroidsStored(spark: SparkSession, dir: String, centroids: Int,
                            trained: Boolean = false, gen: Long = -1L): DataFrame = {
     val g = resolveChunkGen(spark, dir, centroids, trained, gen)

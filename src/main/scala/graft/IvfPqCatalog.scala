@@ -94,7 +94,10 @@ object IvfPqCatalog {
     * sample ([[Similarity.pqTrainHashSeeded]] — chunk ids are md5 strings);
     * `trained = true` swaps in per-subspace k-means
     * ([[Similarity.pqTrainKmeans]]). m × ksub rows — index metadata, tiny
-    * by construction, read back driver-side like the centroid tables. */
+    * by construction, read back driver-side like the centroid tables: once
+    * per listed file set of the stored table ([[IndexMeta]]), so repeated
+    * calls run no Spark job until the table is rewritten or
+    * [[Caches.release]] empties the memo. */
   def chunkCodebookStored(spark: SparkSession, dir: String, m: Int, ksub: Int,
                           trained: Boolean = false): Similarity.PqCodebook = {
     val suffix = if (trained) s"k_m${m}k$ksub" else s"_m${m}k$ksub"
@@ -112,18 +115,20 @@ object IvfPqCatalog {
           col("centroid_vec").cast("array<float>").as("centroid_vec"))
         // ONE file: m×ksub rows of index metadata — a local DataFrame
         // otherwise writes default-parallelism part files (32 on the bench
-        // host), and every serving call's codebook collect then runs a
+        // host), and every codebook read then runs a
         // 32-task job over 32 tiny files (measured: 2 stages × 32 tasks in
         // every flagship IVFADC invocation's profile)
         .coalesce(1)
         .write.mode("overwrite").format("parquet").saveAsTable(name)
     }
-    val rows = tbl.select("subspace", "centroid_idx", "centroid_vec").collect()
-      .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2).toArray)).toMap
-    val mStored = rows.keys.map(_._1).max + 1
-    val ksubStored = rows.keys.map(_._2).max + 1
-    Similarity.PqCodebook(mStored, rows.head._2.length,
-      Array.tabulate(mStored)(j => Array.tabulate(ksubStored)(c => rows((j, c)))))
+    IndexMeta.read(tbl, "pq-codebook") { d =>
+      val rows = d.select("subspace", "centroid_idx", "centroid_vec").collect()
+        .map(r => ((r.getInt(0), r.getInt(1)), r.getSeq[Float](2).toArray)).toMap
+      val mStored = rows.keys.map(_._1).max + 1
+      val ksubStored = rows.keys.map(_._2).max + 1
+      Similarity.PqCodebook(mStored, rows.head._2.length,
+        Array.tabulate(mStored)(j => Array.tabulate(ksubStored)(c => rows((j, c)))))
+    }
   }
 
   /** Catalog table name of the chunk code table for (nlist, m, ksub, mode)

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Build-once session-catalog tables (shared by ChunkCatalog / IvfCatalog):
@@ -16,6 +18,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * appends, whichever session wrote them. The cost is re-resolving the
   * relation per read — file listing stays lazy and partition-pruned, so a
   * probe still lists only the partitions it scans.
+  *
+  * Index metadata (centroid tables, PQ codebooks) read through the store is
+  * decoded into driver arrays once per listed file set ([[IndexMeta]]):
+  * the just-refreshed relation's listing is part of the memo key, so a
+  * write that changes the files is re-read, and [[Caches.release]] empties
+  * the memo.
   */
 object TableStore {
 
@@ -63,7 +71,7 @@ object TableStore {
         case e: Throwable if isStaleListing(e) && tries < attempts - 1 =>
           tries += 1
           names.foreach { n =>
-            try spark.catalog.refreshTable(n) catch { case _: Throwable => () }
+            try spark.catalog.refreshTable(n) catch { case NonFatal(_) => () }
           }
       }
     }
@@ -159,7 +167,7 @@ object TableStore {
         return s.toLong
       } catch {
         case _: java.io.FileNotFoundException => return 0L // deleted (dropGeneration)
-        case e: Throwable =>
+        case NonFatal(e) =>
           attempt += 1
           if (attempt >= 3) throw new IllegalStateException(
             s"generation pointer $p exists but is unreadable — refusing to " +
@@ -365,7 +373,7 @@ object TableStore {
                 Compaction.resumeCommit(spark, st.getPath)
               }
               removed += n
-            } catch { case _: Throwable => () }
+            } catch { case NonFatal(_) => () }
           } else if (n.startsWith("__graft_lease_")) {
             // an aged lease file is reclaimed through the SAME hardened
             // break the waiter path uses (rename-aside + mtime re-verify),
@@ -378,7 +386,7 @@ object TableStore {
             try {
               if (MaintenanceLease.breakStale(fs, st.getPath, olderThanMs))
                 removed += n
-            } catch { case _: Throwable => () }
+            } catch { case NonFatal(_) => () }
           } else {
             // a staging table may still be registered under a persistent
             // metastore — drop the catalog entry with its files

@@ -713,8 +713,7 @@ object Dedup {
     import graft.functions.VectorFunctions.cosineArrays
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val cents = centroids.select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = graft.IndexMeta.centroids(centroids)
     require(cents.nonEmpty, "embeddingPairsCelledIncremental needs centroids")
     val bc = spark.sparkContext.broadcast(cents)
     val probes = math.min(nprobe, cents.length)
@@ -784,8 +783,7 @@ object Dedup {
     import graft.functions.VectorFunctions.cosineArrays
     val spark = newVecs.sparkSession
     import spark.implicits._
-    val cents = centroids.select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = graft.IndexMeta.centroids(centroids)
     require(cents.nonEmpty, "embeddingPairsCelledIncrementalById needs centroids")
     val bc = spark.sparkContext.broadcast(cents)
     val probes = math.min(nprobe, cents.length)
@@ -914,8 +912,7 @@ object Dedup {
       pairEnc: org.apache.spark.sql.Encoder[(K, K, Double)]): DataFrame = {
     import graft.functions.VectorFunctions.cosineArrays
     val spark = newVecs.sparkSession
-    val cents = centroids.select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = graft.IndexMeta.centroids(centroids)
     require(cents.nonEmpty, "celledIncrementalBatched needs centroids")
     val probes = math.min(nprobe, cents.length)
     // batch collected ONCE — broadcast-scale by contract (micro-batches);
@@ -1043,8 +1040,7 @@ object Dedup {
     val centDf = centroids.getOrElse(
       Similarity.seededCentroids(emb, nlist, step, idCol, embCol))
     // index metadata: tiny by construction (nlist rows)
-    val cents = centDf.select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = graft.IndexMeta.centroids(centDf)
     require(cents.nonEmpty, "embeddingPairsCelled needs at least one centroid")
     val bc = spark.sparkContext.broadcast(cents)
     val probes = math.min(nprobe, cents.length)

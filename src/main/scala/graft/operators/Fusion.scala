@@ -47,7 +47,7 @@ object Fusion {
                    embCol: String = "embedding",
                    vectorWeight: Double = VectorWeight,
                    textWeight: Double = TextWeight): DataFrame = {
-    val qv = array(queryVector.map(x => lit(x)): _*)
+    val qv = typedLit(queryVector)
     // vector branch: over-fetch ×2 like the reference's rerank headroom
     val vec = corpus
       .select(col(idCol), ((cosineSimilarity(col(embCol), qv) + 1.0) / 2.0).as("vector_score"))

@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -304,8 +306,7 @@ object Similarity {
     import graft.functions.VectorFunctions.cosineArrays
     val spark = corpus.sparkSession
     // index metadata: tiny by construction (nlist rows)
-    val cents = centroids.select(col("centroid_id").cast("long"), col("centroid_vec"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
+    val cents = graft.IndexMeta.centroids(centroids)
     require(cents.nonEmpty, "ivfAssign needs at least one centroid")
     val minCid = cents.map(_._1).min
     // Two-level coarse assignment past the conf threshold: brute-force
@@ -451,19 +452,37 @@ object Similarity {
   }
 
   /** Driver-side probe: the nprobe centroid ids nearest to the query. The
-    * centroid table is index metadata — tiny by construction — so the
-    * collect is a bounded driver merge, and the resulting ids become a
-    * static IN over the centroid_id partition key. Long-typed centroid ids
-    * (seededCentroids' contract: they are corpus ids). */
-  private def probedCentroidIds(centroids: DataFrame, queryVec: Array[Float],
-                                nprobe: Int): Array[Long] = {
-    val qv = array(queryVec.map(x => lit(x)): _*)
-    centroids
-      .withColumn("qcos", cosineSimilarity(col("centroid_vec"), qv))
-      .orderBy(col("qcos").desc, col("centroid_id").asc)
-      .limit(nprobe)
-      .select(col("centroid_id"))
-      .collect().map(_.getLong(0))
+    * centroid table is index metadata — tiny by construction — read once
+    * per stored file set ([[graft.IndexMeta]]) and ranked here, so a probe
+    * runs no Spark job of its own; the ids become a static IN over the
+    * centroid_id partition key. */
+  private[graft] def probedCentroidIds(centroids: DataFrame, queryVec: Array[Float],
+                                       nprobe: Int): Array[Long] =
+    nearestCells(graft.IndexMeta.centroids(centroids), queryVec, nprobe)
+
+  /** The `n` cells nearest to `q`: `cosineArrays(centroid, q)` is
+    * bit-identical to `cosineSimilarity(centroid_vec, q)`, ordered as
+    * Spark sorts `qcos DESC` (NaN first, -0.0 equal to 0.0), ties by
+    * centroid id ascending. */
+  private def nearestCells(cents: Array[(Long, Array[Float])], q: Array[Float],
+                           n: Int): Array[Long] =
+    cents.map { case (id, v) => (cosineArrays(v, q), id) }
+      .sortWith { case ((ca, ia), (cb, ib)) =>
+        val c = if (ca == cb) 0 else java.lang.Double.compare(ca, cb)
+        if (c != 0) c > 0 else ia < ib
+      }
+      .take(n).map(_._2)
+
+  /** Cell ids as values of the store's `centroid_id` type, for literal
+    * partition filters. */
+  private def cellValues(cells: Seq[Long], cellType: org.apache.spark.sql.types.DataType): Array[Any] = {
+    import org.apache.spark.sql.types._
+    (cellType match {
+      case ByteType => cells.map(_.toByte)
+      case ShortType => cells.map(_.toShort)
+      case IntegerType => cells.map(_.toInt)
+      case _ => cells
+    }).toArray
   }
 
   /** Cell-union filter for the BATCH probes, plan-size-safe at any batch
@@ -495,7 +514,7 @@ object Similarity {
                       k: Int, nprobe: Int,
                       idCol: String = "vec_id", embCol: String = "embedding",
                       preFilter: Option[Column] = None): DataFrame = {
-    val qv = array(queryVec.map(x => lit(x)): _*)
+    val qv = typedLit(queryVec)
     val probedIds = probedCentroidIds(centroids, queryVec, nprobe)
     // FILTERED ANN: the metadata predicate composes with the partition
     // prune — Catalyst pushes it into the same scan (PushedFilters next to
@@ -551,7 +570,7 @@ object Similarity {
                             idCol: String = "vec_id", embCol: String = "embedding",
                             filteredRows: Long = -1L,
                             minSurvivorsPerK: Double = 10.0): DataFrame = {
-    val nlist = centroids.count()
+    val nlist = graft.IndexMeta.centroids(centroids).length
     val fRows =
       if (filteredRows >= 0L) filteredRows
       else assigned.filter(preFilter).count()
@@ -559,7 +578,7 @@ object Similarity {
       ivfSearchPruned(assigned, centroids, queryVec, k, nprobe, idCol, embCol,
         preFilter = Some(preFilter))
     else {
-      val qv = array(queryVec.map(x => lit(x)): _*)
+      val qv = typedLit(queryVec)
       assigned.filter(preFilter)
         .withColumn("score", (cosineSimilarity(col(embCol), qv) + 1.0) / 2.0)
         .orderBy(col("score").desc, col(idCol).asc)
@@ -588,7 +607,7 @@ object Similarity {
                                  qidCol: String = "qid", qvecCol: String = "qvec",
                                  filteredRows: Long = -1L,
                                  minSurvivorsPerK: Double = 10.0): DataFrame = {
-    val nlist = centroids.count()
+    val nlist = graft.IndexMeta.centroids(centroids).length
     val fRows =
       if (filteredRows >= 0L) filteredRows
       else assigned.filter(preFilter).count()
@@ -625,11 +644,11 @@ object Similarity {
   /** Batch IVF probe over a MATERIALIZED partitioned index
     * ([[graft.IvfCatalog]]) — Q queries amortize ONE pruned scan, the
     * serving-THROUGHPUT form of [[ivfSearchPruned]]. A serving tier
-    * answering queries one at a time pays per query: a centroid job, a
-    * partition listing, a pruned scan, a top-k. This form resolves every
-    * query's probe set in one centroid-table job (same expression and
-    * tie-break as the single-query path — cosine desc, centroid_id asc —
-    * so the probed cells are exactly what Q serial probes would pick),
+    * answering queries one at a time pays per query: a partition listing,
+    * a pruned scan, a top-k. This form ranks every query's probe set on
+    * the driver with the single-query path's own ranking (cosine desc,
+    * centroid_id asc — so the probed cells are exactly what Q serial
+    * probes would pick),
     * scans the UNION of all probed cells once (a static `IN` over the
     * partition key, so `PartitionFilters` prunes whole directories exactly
     * like the single-query probe), and scores each scanned row only
@@ -650,7 +669,6 @@ object Similarity {
                            qidCol: String = "qid", qvecCol: String = "qvec",
                            payloadCols: Seq[String] = Nil,
                            preFilter: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = assigned.sparkSession
     import spark.implicits._
@@ -668,22 +686,24 @@ object Similarity {
         }.toSeq, 1),
       StructType(StructField("__qi", IntegerType, nullable = false) +:
         qSelected.schema.fields))
-    // every query's probe set in ONE job over the centroid table (index
-    // metadata, tiny by construction) — the same cosine expression and
-    // tie-break as probedCentroidIds, so probe sets match the serial path
+    // every query's probe set ranked on the driver by the serial path's
+    // own ranking (nearestCells), so probe sets match it; the (cell, query)
+    // pairs ride a local relation — no Spark job
     val cellType = assigned.schema("centroid_id").dataType
-    val pairs = centroids.crossJoin(broadcast(qIndexed))
-      .withColumn("__qcos", cosineSimilarity(col("centroid_vec"), col(qvecCol)))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__qi"))
-          .orderBy(col("__qcos").desc, col("centroid_id").asc)))
-      .filter(col("__rn") <= nprobe)
+    val cents = graft.IndexMeta.centroids(centroids)
+    val probes = qRows.map(r => nearestCells(cents, r.getSeq[Float](1).toArray, nprobe))
+    val pairs = spark.createDataFrame(
+        probes.zipWithIndex.flatMap { case (cs, i) =>
+          cs.map(c => org.apache.spark.sql.Row(c, i, qRows(i).get(1)))
+        }.toSeq.asJava,
+        StructType(Seq(StructField("centroid_id", LongType, nullable = false),
+          StructField("__qi", IntegerType, nullable = false), qSelected.schema(qvecCol))))
       .select(col("centroid_id").cast(cellType).as("centroid_id"),
         col("__qi"), col(qvecCol))
     // the union of probed cells as LITERALS while plan-size-safe (static
     // partition pruning, not a join the planner may or may not turn into
     // dynamic pruning); broadcast semi-join past the literal gate
-    val cells = pairs.select(col("centroid_id")).distinct().collect().map(_.get(0))
+    val cells = cellValues(probes.flatten.distinct.sorted.toSeq, cellType)
     // a QUEUE-wide metadata predicate (tenant, language, label — the same
     // for every query in the batch) composes into the one shared scan,
     // PushedFilters next to PartitionFilters; per-query filters belong on
@@ -738,15 +758,10 @@ object Similarity {
   def ivfSearch(corpus: DataFrame, centroids: DataFrame, queryVec: Array[Float],
                 k: Int, nprobe: Int,
                 idCol: String = "vec_id", embCol: String = "embedding"): DataFrame = {
-    val qv = array(queryVec.map(x => lit(x)): _*)
-    val probed = centroids
-      .withColumn("qcos", cosineSimilarity(col("centroid_vec"), qv))
-      .orderBy(col("qcos").desc, col("centroid_id").asc)
-      .limit(nprobe)
-      .select(col("centroid_id"))
-    val assigned = ivfAssign(corpus, centroids, idCol, embCol)
-    assigned.join(broadcast(probed), "centroid_id")
-      .withColumn("score", (cosineSimilarity(col(embCol), qv) + 1.0) / 2.0)
+    val probedIds = probedCentroidIds(centroids, queryVec, nprobe)
+    ivfAssign(corpus, centroids, idCol, embCol)
+      .filter(col("centroid_id").isin(probedIds: _*))
+      .withColumn("score", (cosineSimilarity(col(embCol), typedLit(queryVec)) + 1.0) / 2.0)
       .orderBy(col("score").desc, col(idCol).asc)
       .limit(k)
   }
@@ -1082,7 +1097,7 @@ object Similarity {
   private def rerankExact(corpus: DataFrame, candidates: DataFrame,
                           queryVec: Array[Float], k: Int,
                           idCol: String, embCol: String): DataFrame = {
-    val qv = array(queryVec.map(x => lit(x)): _*)
+    val qv = typedLit(queryVec)
     corpus.join(broadcast(candidates), idCol)
       .withColumn("score", (cosineSimilarity(col(embCol), qv) + 1.0) / 2.0)
       .orderBy(col("score").desc, col(idCol).asc)
@@ -1182,7 +1197,7 @@ object Similarity {
   }
 
   /** [[ivfPqSearchPruned]] for a QUEUE of queries — the full compressed
-    * serving stack batched: Q queries share ONE centroid job, ONE
+    * serving stack batched: Q queries share driver-ranked probe sets, ONE
     * partition-pruned scan of the union of their probed cells read as
     * m-byte PQ codes (each code row ADC-scored only against the queries
     * that probed its cell, per-query LUTs riding in the kernel's closure
@@ -1223,7 +1238,6 @@ object Similarity {
         qSelected.schema.fields))
     val luts = qVecs.map(buildAdcLut(cb, _))
     val qnorms = qVecs.map(vecNorm)
-    // per-query probe sets: one centroid job, serial-path tie-break
     val cellType = codesAssigned.schema("centroid_id").dataType
     // the candidate-cell ride-along (below) carries cells as LONG inside
     // the top-k pair — a non-integral centroid id would cast to null and
@@ -1232,14 +1246,17 @@ object Similarity {
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(cellType),
       s"ivfPqSearchPrunedBatch centroid_id must be integral, got " +
         s"${cellType.catalogString} — the engine's catalogs assign long cells")
-    val pairs = centroids.crossJoin(broadcast(qIndexed.select(col("__qi"), col(qvecCol))))
-      .withColumn("__qcos", cosineSimilarity(col("centroid_vec"), col(qvecCol)))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__qi"))
-          .orderBy(col("__qcos").desc, col("centroid_id").asc)))
-      .filter(col("__rn") <= nprobe)
+    // per-query probe sets ranked on the driver, as the serial path ranks
+    val cents = graft.IndexMeta.centroids(centroids)
+    val probes = qVecs.map(nearestCells(cents, _, nprobe))
+    val pairs = spark.createDataFrame(
+        probes.zipWithIndex.flatMap { case (cs, i) =>
+          cs.map(c => org.apache.spark.sql.Row(c, i))
+        }.toSeq.asJava,
+        StructType(Seq(StructField("centroid_id", LongType, nullable = false),
+          StructField("__qi", IntegerType, nullable = false))))
       .select(col("centroid_id").cast(cellType).as("centroid_id"), col("__qi"))
-    val cells = pairs.select(col("centroid_id")).distinct().collect().map(_.get(0))
+    val cells = cellValues(probes.flatten.distinct.sorted.toSeq, cellType)
     val adcUdf = udf { (code: Array[Byte], norm: Double, qi: Int) =>
       val qn = qnorms(qi)
       if (norm == 0.0 || qn == 0.0) -2.0
@@ -1300,12 +1317,7 @@ object Similarity {
     // exactly one cell, so this loses nothing — the decade-measured fix
     // for the probed-cell raw read that made warm batch ADC trail raw)
     val candCellLongs = candRows.map(_.getLong(2)).distinct.toIndexedSeq
-    val candCells: Array[Any] = (cellType match {
-      case ByteType => candCellLongs.map(_.toByte)
-      case ShortType => candCellLongs.map(_.toShort)
-      case IntegerType => candCellLongs.map(_.toInt)
-      case _ => candCellLongs
-    }).toArray
+    val candCells = cellValues(candCellLongs, cellType)
     val prunedRaw = filterToCells(corpusAssigned, candCells,
       spark.createDataFrame(
         spark.sparkContext.parallelize(
@@ -1378,7 +1390,7 @@ object Similarity {
       .orderBy(col("__acos").desc, col(idCol).asc)
       .limit(k * rerankFactor)
       .select(col(idCol))
-    val qv = array(queryVec.map(x => lit(x)): _*)
+    val qv = typedLit(queryVec)
     corpus.join(broadcast(candidates), idCol)
       .withColumn("score", (cosineSimilarity(col(embCol), qv) + 1.0) / 2.0)
       .orderBy(col("score").desc, col(idCol).asc)

@@ -34,16 +34,13 @@ object VectorSearch {
   def score(embCol: Column, queryVec: Column): Column =
     (cosineSimilarity(embCol, queryVec) + 1.0) / 2.0
 
-  private def litVector(v: Array[Float]): Column =
-    array(v.map(x => lit(x)): _*)
-
   /** V2: exact cosine KNN of one query vector against a corpus DataFrame.
     * Keeps all corpus columns, adds `score`; deterministic tie-break on
     * `idCol`. */
   def knn(corpus: DataFrame, request: SearchRequest,
           embCol: String = "embedding", idCol: String = "id"): DataFrame = {
     val scored = corpus
-      .withColumn("score", score(col(embCol), litVector(request.queryVector)))
+      .withColumn("score", score(col(embCol), typedLit(request.queryVector)))
     val excluded = Seq(
       request.excludeId.map(x => col(idCol) =!= lit(x)),
       request.excludeDocumentId.map(x => col("document_id") =!= lit(x)))

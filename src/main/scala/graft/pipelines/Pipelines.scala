@@ -270,7 +270,7 @@ object Pipelines {
   }
 
   /** [[flagshipIvf]] for a QUEUE of queries — the serving-throughput form.
-    * One centroid job resolves every query's probe set and one scan of the
+    * Probe sets are ranked on the driver and one scan of the
     * union of probed cells answers all of them
     * ([[graft.operators.Similarity.ivfSearchPrunedBatch]] — per-query
     * results are row-for-row what serial [[flagshipIvf]] calls return,
@@ -306,7 +306,7 @@ object Pipelines {
   /** [[flagshipIvfPq]] for a QUEUE of queries — the measured-cheapest
     * serving configuration at ×1000 (SCALE.md round-13 batch matrix:
     * batched ADC 0.056 s/query vs raw-batch 0.064) made reachable from the
-    * deployment shape. One centroid job resolves every query's probe set,
+    * deployment shape. Probe sets are ranked on the driver,
     * one partition-pruned scan of the union of probed cells reads m-byte PQ
     * codes (each code row ADC-scored only against the queries that probed
     * its cell), per-query candidate top-k·rerank through the bounded heap,

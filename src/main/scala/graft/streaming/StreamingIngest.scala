@@ -618,7 +618,7 @@ object StreamingIngest {
     * stream, closing the loop the ingest/edit channels opened: queries
     * arrive as a streaming DataFrame of (idCol, textCol) rows and every
     * micro-batch is answered in ONE batched flagship probe
-    * ([[Pipelines.flagshipIvfBatch]] — one centroid job + one
+    * ([[Pipelines.flagshipIvfBatch]] — driver-ranked probe sets + one
     * union-of-probed-cells scan + the broadcast attribution join, per-query
     * rows identical to serial `flagshipIvf` calls). Duplicate texts within
     * a batch share one probe and fan back out to their query ids. Answers
@@ -634,7 +634,7 @@ object StreamingIngest {
     * `trigger` is the latency/throughput knob the ×1000 serving matrix
     * says matters most: per-query cost falls 3–4× from batch-8 to
     * batch-32 (SCALE.md round-14) because the whole micro-batch shares
-    * one centroid job and one scan — a `Trigger.ProcessingTime` interval
+    * one scan — a `Trigger.ProcessingTime` interval
     * sized to the arrival rate buys batch depth at bounded added latency.
     * Default: process as available (lowest latency, shallowest batches).
     *
