@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -100,9 +102,15 @@ object DocLifecycle {
     }
   }
 
-  /** Append one batch's (document_id, centroid_id) pairs — called by
-    * [[IvfCatalog.appendChunks]] when the index exists, in the same
+  /** Append one batch's distinct (document_id, centroid_id) pairs — called
+    * by [[IvfCatalog.appendChunks]] when the index exists, in the same
     * micro-batch as the row append (the index must never miss a cell).
+    *
+    * Layout: ONE task writes the pairs `bucketBy(32).sortBy` — one file
+    * per non-empty bucket per append, no 32-reducer shuffle in front of a
+    * dozen rows. k appends leave up to k files in a bucket, still read
+    * bucket-pruned; [[compactDocCells]] rebuilds through the clusterWrite
+    * shape on the stores' cadence, back to one file per bucket.
     * Serialized against [[compactDocCells]]' swap by [[MaintenanceLock]]:
     * within the driver JVM (the deployment shape — all of a pipeline's
     * writer loops run on one driver) the append can never observe the
@@ -113,8 +121,9 @@ object DocLifecycle {
     * already a contract violation the lease fails loudly on); a table
     * still missing after the tolerance fails loudly. */
   private[graft] def appendDocCells(spark: SparkSession, dir: String, nlist: Int,
-                                    trained: Boolean, assigned: DataFrame,
-                                    gen: Long = -1L): Unit = {
+                                    trained: Boolean, pairs: Iterable[(Long, Long)],
+                                    gen: Long = -1L): Unit = if (pairs.nonEmpty) {
+    import spark.implicits._
     val logical = docCellsName(dir, nlist, trained)
     val name = TableStore.physGen(logical,
       IvfCatalog.resolveChunkGen(spark, dir, nlist, trained, gen))
@@ -130,8 +139,8 @@ object DocLifecycle {
             "rerun the batch once the maintenance writer is done")
         Thread.sleep(100); waited += 1
       }
-      assigned.select(col("document_id"), col("centroid_id")).distinct()
-        .repartition(32, col("document_id"))
+      pairs.toSeq.toDF("document_id", "centroid_id")
+        .coalesce(1) // one writing task: one file per non-empty bucket
         .write.mode("append")
         .bucketBy(32, "document_id").sortBy("document_id")
         .format("parquet").saveAsTable(name)
@@ -201,8 +210,7 @@ object DocLifecycle {
             .join(spark.table(stage).select(cols: _*),
               Seq("document_id", "centroid_id"), "left_anti")
             .localCheckpoint(true)
-          val dCells = delta.select("centroid_id").distinct()
-            .collect().map(_.getLong(0)).toSeq
+          val dCells = docCellRows(delta).keys.map(_._2).toSeq.distinct
           if (dCells.nonEmpty) {
             // pruned read of just the delta's cells; isin only while the
             // cell list is plan-size-safe (the compaction plan-depth
@@ -237,7 +245,7 @@ object DocLifecycle {
             // healthy — return normally rather than failing a cadence
             // caller over a healed state.
             try { spark.sql(s"ALTER TABLE $stage RENAME TO $name"); healed = true }
-            catch { case _: Throwable => spark.sql(s"DROP TABLE IF EXISTS $stage") }
+            catch { case NonFatal(_) => spark.sql(s"DROP TABLE IF EXISTS $stage") }
           } else
             spark.sql(s"DROP TABLE IF EXISTS $stage")
           if (!healed) throw e
@@ -273,13 +281,35 @@ object DocLifecycle {
       else d.join(broadcast(df), Seq("document_id"), "left_anti")
   }
 
+  /** (document_id, centroid_id) → rows of `df`, counted per partition and
+    * merged on the driver: ONE job, no shuffle (a `distinct()` or `count()`
+    * pays an extra AQE shuffle job). Every batch fact of the edit paths is a
+    * projection of this batch-sized map. */
+  private[graft] def docCellRows(df: DataFrame): Map[(Long, Long), Long] = {
+    import df.sparkSession.implicits._
+    df.select(col("document_id").cast("long"), col("centroid_id").cast("long"))
+      .as[(Long, Long)]
+      .mapPartitions { it =>
+        val m = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
+        it.foreach(p => m(p) = m.getOrElse(p, 0L) + 1L)
+        m.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+  }
+
   /** The cells the index lists for the edit batch — a bucket-pruned read;
     * ≤ nlist values by construction. */
   private def cellsOf(spark: SparkSession, dir: String, nlist: Int,
                       trained: Boolean, eids: EditIds, gen: Long): Seq[Long] =
-    eids.keep(docCells(spark, dir, nlist, trained, gen))
-      .select("centroid_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
+    docCellRows(eids.keep(docCells(spark, dir, nlist, trained, gen)))
+      .keys.map(_._2).toSeq.distinct.sorted
+
+  /** Store rows of the edit batch in `cells`, counted BEFORE the rewrite
+    * removes exactly these rows. */
+  private def rowsOf(spark: SparkSession, store: String, eids: EditIds, cells: Seq[Long]): Long = {
+    spark.catalog.refreshTable(store)
+    docCellRows(eids.keep(spark.table(store).filter(col("centroid_id").isin(cells: _*)))).values.sum
+  }
 
   /** Group `cells` into rewrite batches bounded by `maxBatchBytes` of their
     * CURRENT store bytes — [[Compaction.compactTable]]'s working-set cap, so
@@ -407,6 +437,14 @@ object DocLifecycle {
     }
   }
 
+  /** The dead-code purge: keep the codes whose id is live in the rewritten store. */
+  private def purgeDeadCodes(spark: SparkSession, store: String, codes: String,
+                             batches: Seq[Seq[Long]]): Unit =
+    batches.filter(_.nonEmpty).foreach { cb =>
+      val liveIds = spark.table(store).filter(col("centroid_id").isin(cb: _*)).select("chunk_id")
+      overwriteCellsRetrying(spark, codes, cb, _.join(liveIds, Seq("chunk_id"), "left_semi"))
+    }
+
   /** Replace `docs`' chunks in the stored index with their re-run feature
     * pipeline — the edited-document path. Returns (chunks removed, chunks
     * added). A document absent from the store is simply added (upsert), one
@@ -445,59 +483,69 @@ object DocLifecycle {
     val store = TableStore.physGen(IvfCatalog.chunkStoreName(dir, nlist, trained), g)
     require(spark.catalog.tableExists(store),
       s"stored chunk IVF index for '$dir' not built — assignedChunks first")
-    val d = docs.select(col(idCol).cast("long").as(idCol), col(textCol))
-      .dropDuplicates(idCol, textCol) // a doc redelivered verbatim in one batch
-    val multiRev = d.groupBy(col(idCol)).count()
-      .filter(col("count") > 1).select(col(idCol)).limit(1).collect()
+    // ONE collect gives the revision check and the id list: two distinct
+    // texts ⟺ min ≠ max, or a text beside a null. `revs` and `assigned` are
+    // pinned lazily (localCheckpoint(false): rows land with the first action
+    // reading them) — computed once, with no lineage the rewrite invalidates
+    val revs = docs.select(col(idCol).cast("long").as(idCol), col(textCol))
+      .groupBy(col(idCol))
+      .agg(min(col(textCol)).as(textCol), max(col(textCol)).as("__max"),
+        count(col(textCol)).as("__texts"), count(lit(1)).as("__rows"))
+      .localCheckpoint(false)
+    val checked = revs.select(col(idCol),
+        coalesce(col("__max") =!= col(textCol) ||
+          (col("__texts") > 0 && col("__rows") > col("__texts")), lit(false)))
+      .collect().map(r => (r.getLong(0), r.getBoolean(1)))
+    val multiRev = checked.filter(_._2).map(_._1)
     require(multiRev.isEmpty,
-      s"batch carries more than one distinct revision of $idCol=${multiRev.headOption.map(_.get(0)).orNull}" +
+      s"batch carries more than one distinct revision of $idCol=${multiRev.min}" +
         " — reduce to one revision per document (e.g. latest by sequence) before upserting")
-    val ids = d.select(col(idCol)).distinct()
-      .collect().map(_.getLong(0)).toSeq // batch-sized by construction
-    val chunks = Pipelines.featurePipeline(d, qualityThreshold, idCol, textCol)
-      .select(col("chunk_id"), col("document_id"), col("word_count"), col("embedding"))
-    val assigned = Similarity.ivfAssign(chunks,
+    val assigned = Similarity.ivfAssign( // one row per id: md5 chunk ids cannot collide
+        Pipelines.featurePipeline(revs.select(col(idCol), col(textCol)),
+            qualityThreshold, idCol, textCol)
+          .select(col("chunk_id"), col("document_id"), col("word_count"), col("embedding")),
         IvfCatalog.chunkCentroidsStored(spark, dir, nlist, trained, gen = g), idCol = "chunk_id")
-      .dropDuplicates("chunk_id") // belt: content-derived ids can't collide across docs
-      .cache()
-    val eids = new EditIds(spark, ids, bulkThreshold)
-    val newCells = assigned.select("centroid_id").distinct()
-      .collect().map(_.getLong(0)).toSeq
+      .localCheckpoint(false)
+    val eids = new EditIds(spark, checked.map(_._1).toSeq, bulkThreshold)
+    val added = docCellRows(assigned) // chunks added, their cells, the index's new pairs
+    val nAdded = added.values.sum
     val oldCells = cellsOf(spark, dir, nlist, trained, eids, g)
-    val touched = (newCells ++ oldCells).distinct
-    spark.catalog.refreshTable(store)
-    // counted eagerly, BEFORE the rewrite removes exactly these rows
-    val nRemoved = eids.keep(spark.table(store)
-      .filter(col("centroid_id").isin(touched: _*))).count()
-    val nAdded = assigned.count()
-    val flagged =
-      if (!flagNearDups) assigned.withColumn("near_dup_of", lit(null).cast("string"))
-      else {
-        // same semantics as the ingest loop's flag: counterparts are stored
-        // chunks or batch-mates, smallest id wins — but the store side
-        // excludes the document's own OUTGOING rows, so a flag can never
-        // point at an id this very call removes
-        // Auto dispatch: an edit-stream micro-batch takes the batched
-        // kernel; a BULK re-crawl (this path's documented other caller)
-        // keeps the distributed kernel — the batched form's driver collect
-        // would not survive a million-chunk batch
-        val pairs = graft.operators.Dedup.embeddingPairsCelledIncrementalByIdAuto(
+    val touched = (added.keys.map(_._2).toSeq ++ oldCells).distinct.sorted
+    val nRemoved = rowsOf(spark, store, eids, touched)
+    // the ingest loop's flag (Dedup.nearDupFlags): the smallest counterpart
+    // in UTF-8 binary order among stored chunks and batch-mates — the store
+    // side excludes the documents' own OUTGOING rows, so a flag never points
+    // at an id this call removes. Read once before the rewrite, one
+    // counterpart per id per partition (a bulk batch ships ids, not pairs),
+    // then a broadcast map. Auto dispatch: micro-batch → batched kernel, bulk → distributed
+    val flags: Map[String, String] = if (!flagNearDups) Map.empty else {
+      import spark.implicits._
+      val least = graft.functions.Orderings.utf8
+      graft.operators.Dedup.embeddingPairsCelledIncrementalByIdAuto(
           assigned.select(col("chunk_id"), col("embedding")),
           eids.drop(spark.table(store)),
           IvfCatalog.chunkCentroidsStored(spark, dir, nlist, trained, gen = g),
           flagMinCosine, batchRows = nAdded, nprobe = flagNprobe)
-        val flags = graft.operators.Dedup.nearDupFlags(pairs, assigned.select(col("chunk_id")))
-        assigned.join(broadcast(flags), Seq("chunk_id"), "left")
-      }
+        .select("left_id", "right_id").as[(String, String)]
+        .flatMap { case (a, b) => Seq(a -> b, b -> a) }
+        .mapPartitions(_.foldLeft(Map.empty[String, String]) { case (m, (a, b)) =>
+          m.updated(a, m.get(a).fold(b)(least.min(_, b))) }.iterator)
+        .collect().groupMapReduce(_._1)(_._2)(least.min)
+    }
     val storeSchema = spark.table(store).schema
-    val newRows = flagged.select(storeSchema.fieldNames.map { f =>
-      if (flagged.columns.contains(f)) col(f).cast(storeSchema(f).dataType).as(f)
-      else lit(null).cast(storeSchema(f).dataType).as(f)
-    }.toIndexedSeq: _*).localCheckpoint(true) // pinned: the rewrite invalidates its lineage
+    val newRows = {
+      val bc = spark.sparkContext.broadcast(flags)
+      val flagged = assigned.withColumn("near_dup_of",
+        udf((id: String) => bc.value.getOrElse(id, null)).apply(col("chunk_id")))
+      flagged.select(storeSchema.fieldNames.map { f =>
+        if (flagged.columns.contains(f)) col(f).cast(storeSchema(f).dataType).as(f)
+        else lit(null).cast(storeSchema(f).dataType).as(f)
+      }.toIndexedSeq: _*)
+    }
     // mutation order is the crash-convergence contract (object scaladoc):
     // (1) index pairs FIRST — a crash after leaves superset false positives,
     //     pairs-after would leave live rows in unlisted cells forever;
-    appendDocCells(spark, dir, nlist, trained, assigned, gen = g)
+    appendDocCells(spark, dir, nlist, trained, added.keys, gen = g)
     val codesTable =
       if (pqM == 0) None
       else Some(TableStore.physGen(
@@ -515,12 +563,8 @@ object DocLifecycle {
     //     (one batch for an edit-stream call; a bulk re-crawl touching half
     //     the cells becomes a sequence of bounded jobs)
     val batches = cellBatches(spark, store, touched, maxBatchBytes)
-    batches.foreach { cb =>
-      overwriteCellsRetrying(spark, store, cb,
-        base => eids.drop(base)
-          .unionByName(newRows.filter(col("centroid_id").isin(cb: _*))),
-        beforeOverwrite)
-    }
+    batches.foreach(cb => overwriteCellsRetrying(spark, store, cb,
+      eids.drop(_).unionByName(newRows.filter(col("centroid_id").isin(cb: _*))), beforeOverwrite))
     // (4) dead-code purge LAST, keeping codes live in the REWRITTEN store —
     //     a removed-ids purge would delete live codes on a replayed
     //     unchanged upsert (same ids skipped by (2), then purged). Scope:
@@ -530,16 +574,7 @@ object DocLifecycle {
     //     codes, and a crash orphan in a new cell merely reranks away until
     //     a later edit of that doc lists the cell and purges it)
     val oldCellSet = oldCells.toSet
-    codesTable.foreach { codes =>
-      batches.map(_.filter(oldCellSet)).filter(_.nonEmpty).foreach { cb =>
-        val liveIds = spark.table(store)
-          .filter(col("centroid_id").isin(cb: _*))
-          .select(col("chunk_id"))
-        overwriteCellsRetrying(spark, codes, cb,
-          base => base.join(liveIds, Seq("chunk_id"), "left_semi"))
-      }
-    }
-    assigned.unpersist()
+    codesTable.foreach(purgeDeadCodes(spark, store, _, batches.map(_.filter(oldCellSet))))
     (nRemoved, nAdded)
     }
   }
@@ -581,30 +616,6 @@ object DocLifecycle {
     (nDocs, removed, added)
   }
 
-  /** [[scrubSpansInStore]] over [[graft.operators.Dedup.duplicateSpans]] —
-    * the one-call monolithic form (fits up to the ×1000 corpus; at decade
-    * scale compute the spans with the sliced pass and hand them in). */
-  def scrubDuplicateSpansInStore(spark: SparkSession, dir: String,
-                                 docs: DataFrame, nlist: Int,
-                                 k: Int = 5, minOcc: Int = 2,
-                                 qualityThreshold: Double = 0.0,
-                                 idCol: String = "doc_id",
-                                 textCol: String = "text",
-                                 trained: Boolean = false,
-                                 pqM: Int = 0,
-                                 pqKsub: Int = 32): (Long, Long, Long) =
-    // releaseAfter: duplicateSpans persists its gram table and this call
-    // materializes everything internally (returns only counts) — without
-    // the scope each maintenance call would leave one dead cached plan in
-    // the Caches registry until a global release() (ADVICE r19; the same
-    // loop-shaped growth the r15 note warns about)
-    graft.Caches.releaseAfter {
-      scrubSpansInStore(spark, dir, docs,
-        graft.operators.Dedup.duplicateSpans(docs, k, minOcc, idCol, textCol),
-        nlist, qualityThreshold, idCol, textCol, trained,
-        pqM = pqM, pqKsub = pqKsub)
-    }
-
   /** Cascading delete of `ids`' chunks from the stored index — S10 at the
     * serving-index level. Returns the number of chunks removed. Mutation
     * order: raw store first, code purge last (live-id semi-join, same as
@@ -625,26 +636,13 @@ object DocLifecycle {
     val touched = cellsOf(spark, dir, nlist, trained, eids, g)
     if (touched.isEmpty) 0L
     else {
-    spark.catalog.refreshTable(store)
-    // counted eagerly, BEFORE the rewrite removes exactly these rows
-    val nRemoved = eids.keep(spark.table(store)
-      .filter(col("centroid_id").isin(touched: _*))).count()
+    val nRemoved = rowsOf(spark, store, eids, touched)
     val batches = cellBatches(spark, store, touched, maxBatchBytes)
-    batches.foreach { cb =>
-      overwriteCellsRetrying(spark, store, cb, base => eids.drop(base), beforeOverwrite)
-    }
+    batches.foreach(overwriteCellsRetrying(spark, store, _, eids.drop(_), beforeOverwrite))
     if (pqM > 0) {
       val codes = TableStore.physGen(
         IvfPqCatalog.chunkCodesTableName(spark, dir, nlist, pqM, pqKsub, trained), g)
-      if (spark.catalog.tableExists(codes)) {
-        batches.foreach { cb =>
-          val liveIds = spark.table(store)
-            .filter(col("centroid_id").isin(cb: _*))
-            .select(col("chunk_id"))
-          overwriteCellsRetrying(spark, codes, cb,
-            base => base.join(liveIds, Seq("chunk_id"), "left_semi"))
-        }
-      }
+      if (spark.catalog.tableExists(codes)) purgeDeadCodes(spark, store, codes, batches)
     }
     nRemoved
     }

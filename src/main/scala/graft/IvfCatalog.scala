@@ -210,7 +210,7 @@ object IvfCatalog {
       s"stored chunk IVF index for '$dir' not built — assignedChunks first")
     val assigned = Similarity.ivfAssign(newChunks,
       chunkCentroidsStored(spark, dir, centroids, trained, gen = g), idCol = "chunk_id")
-    // materialize the (doc, cell) pairs BEFORE the append: ingest-loop
+    // collect the (doc, cell) pairs BEFORE the append: ingest-loop
     // batches derive from an anti-join against THIS store, and the append's
     // refreshTable invalidates that lineage — a post-append re-evaluation
     // would see its own rows in the store and produce ZERO pairs, silently
@@ -218,8 +218,7 @@ object IvfCatalog {
     val docPairs =
       if (spark.catalog.tableExists(TableStore.physGen(
             DocLifecycle.docCellsName(dir, centroids, trained), g)))
-        Some(assigned.select(col("document_id"), col("centroid_id"))
-          .distinct().localCheckpoint(true))
+        Some(DocLifecycle.docCellRows(assigned).keys)
       else None
     // the index's pairs land BEFORE the rows themselves (DocLifecycle's
     // superset contract: over-listing a cell costs one pruned false-positive

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -193,7 +195,7 @@ object Reindex {
   }
 
   /** Append `pairs` (document_id, centroid_id) into a bucketed pair table —
-    * [[DocLifecycle.appendDocCells]]'s write shape, on a private staged
+    * [[DocLifecycle.rebuildDocCells]]' clusterWrite shape, on a private staged
     * table (no lock needed: nothing else writes it). */
   private def appendPairs(spark: SparkSession, table: String, pairs: DataFrame): Unit =
     pairs.select(col("document_id"), col("centroid_id")).distinct()
@@ -556,7 +558,7 @@ object Reindex {
       try {
         val hb = TableStore.heartbeatPath(spark, nonce)
         hb.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hb, false)
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       if (flipped) spark.sql(s"DROP TABLE IF EXISTS `$stOldPairs`")
     }
     }
@@ -670,14 +672,13 @@ object Reindex {
         spark.table(centsName).filter(col("centroid_id") =!= cell),
         idCol = "chunk_id")
       .localCheckpoint(true) // pinned before the rewrite invalidates its lineage
-    val movedRows = moved.count()
-    val targets = moved.select("centroid_id").distinct()
-      .collect().map(_.getLong(0)).toSeq.sorted
+    val movedPairs = DocLifecycle.docCellRows(moved)
+    val movedRows = movedPairs.values.sum
+    val targets = movedPairs.keys.map(_._2).toSeq.distinct.sorted
     // 3. pairs BEFORE rows (the index must never miss a cell)
     if (spark.catalog.tableExists(TableStore.physGen(
           DocLifecycle.docCellsName(dir, nlist, trained), g)))
-      DocLifecycle.appendDocCells(spark, dir, nlist, trained,
-        moved.select(col("document_id"), col("centroid_id")), gen = g)
+      DocLifecycle.appendDocCells(spark, dir, nlist, trained, movedPairs.keys, gen = g)
     // 4. the store rewrite: moved ids land at their targets; anything ELSE
     //    in the parent (a raced-in append, retried through the fingerprint
     //    defense) stays put, keeping the parent alive. `beforeRewrite` is
@@ -805,7 +806,7 @@ object Reindex {
         // "the family is gone" must mean the bytes, not just the entries
         val physP = new org.apache.hadoop.fs.Path(wh, phys)
         try if (whFs.exists(physP)) whFs.delete(physP, true)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         // crashed-swap staging of a dropped member retires with its family
         val marked =
           s"^${java.util.regex.Pattern.quote(phys)}__(cstage|rstage|retired)\\d+$$".r
@@ -815,13 +816,13 @@ object Reindex {
             spark.sql(s"DROP TABLE IF EXISTS `$tb`")
             val p = new org.apache.hadoop.fs.Path(wh, tb)
             try if (whFs.exists(p)) whFs.delete(p, true)
-            catch { case _: Throwable => () }
+            catch { case NonFatal(_) => () }
           }
       }
     // the family is gone — retire its pointer so a future first build
     // starts back at the natural names
     val ptr = TableStore.genPointerPath(spark, group)
     try ptr.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(ptr, false)
-    catch { case _: Throwable => () }
+    catch { case NonFatal(_) => () }
   }
 }

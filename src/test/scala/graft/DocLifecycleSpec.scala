@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.JobCount
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.BucketingUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -19,6 +23,26 @@ class DocLifecycleSpec extends AnyFunSuite {
     .getOrCreate()
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** A one-chunk document: a short paragraph well under one chunk. */
+  private def oneChunk(id: Long, rev: String): (Long, String) =
+    (id, s"Document $id $rev narrates one short paragraph about the serving store and its cells.")
+
+  /** Chunks of `docs` ready for [[IvfCatalog.appendChunks]]. */
+  private def chunksOf(docs: Seq[(Long, String)]): DataFrame = {
+    import spark.implicits._
+    graft.pipelines.Pipelines.featurePipeline(docs.toDF("doc_id", "text"), 0.0)
+      .select("chunk_id", "document_id", "word_count", "embedding").localCheckpoint()
+  }
+
+  /** Bucket id → data files of the doc→cells table `name`. */
+  private def bucketFiles(name: String): Map[Int, Seq[String]] = {
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(name, Some("default"))).location)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(loc)
+      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSeq
+      .groupBy(f => BucketingUtils.getBucketId(f).get)
+  }
 
   /** (chunk_id, centroid_id, document_id) content snapshot — order-free. */
   private def snapshot(store: DataFrame): Set[(String, Long, Long)] =
@@ -273,12 +297,21 @@ class DocLifecycleSpec extends AnyFunSuite {
     val stored = IvfCatalog.assignedChunks(spark, dir, nlist)
       .filter(col("document_id") === 921001L).select("chunk_id").distinct().count()
     assert(add === stored, "verbatim duplicates must collapse to one revision's chunks")
-    // two DISTINCT revisions: no silent winner — replace_one needs exactly one
-    val ex = intercept[IllegalArgumentException] {
-      DocLifecycle.upsertDocChunks(spark, dir,
-        Seq((921001L, mk(1)), (921001L, mk(2))).toDF("doc_id", "text"), nlist)
+    // two DISTINCT revisions: no silent winner — replace_one needs exactly
+    // one. Revisions one character apart are still two, on the literal
+    // route and on the bulk route (bulkThreshold = 0), and neither call
+    // touches the store
+    val stable = snapshot(IvfCatalog.assignedChunks(spark, dir, nlist))
+    for ((a, b) <- Seq((mk(1), mk(2)), (mk(1), mk(1) + "."));
+         bulk <- Seq(DocLifecycle.BulkThreshold, 0)) {
+      val ex = intercept[IllegalArgumentException] {
+        DocLifecycle.upsertDocChunks(spark, dir,
+          Seq((921001L, a), (921002L, a), (921001L, b)).toDF("doc_id", "text"), nlist,
+          bulkThreshold = bulk)
+      }
+      assert(ex.getMessage.contains("one revision") && ex.getMessage.contains("921001"))
     }
-    assert(ex.getMessage.contains("one revision"))
+    assert(snapshot(IvfCatalog.assignedChunks(spark, dir, nlist)) === stable)
     Seq(storeName, centName, idxName).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
@@ -471,5 +504,78 @@ class DocLifecycleSpec extends AnyFunSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(replayed === got, "replaying the same remediation changed the store")
     toDrop.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("warm edit calls run batch-sized Spark job counts") {
+    import spark.implicits._
+    val nlist = 67
+    val storeName = TableStore.tableName(s"ivfchunks$nlist", dir)
+    val centName = TableStore.tableName(s"ivfchunkcent$nlist", dir)
+    val idxName = DocLifecycle.docCellsName(dir, nlist)
+    Seq(storeName, centName, idxName).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    IvfCatalog.assignedChunks(spark, dir, nlist).count()
+    DocLifecycle.docCells(spark, dir, nlist).count() // the index exists: appends maintain it
+    def jobs(body: => Unit): Int = JobCount.of(spark.sparkContext)(body)
+    // one ingest-shaped round: append 3 new documents, upsert 3 documents
+    // appended the round before, delete 2 others of them
+    def round(r: Int): (Int, Int, Int) = {
+      val base = 950000L + 10 * r
+      val fresh = chunksOf((0 until 5).map(i => oneChunk(base + 10 + i, "fresh")))
+      val app = jobs(IvfCatalog.appendChunks(spark, dir, fresh, nlist))
+      val up = jobs(DocLifecycle.upsertDocChunks(spark, dir,
+        (0 until 3).map(i => oneChunk(base + i, s"edit$r")).toDF("doc_id", "text"), nlist))
+      val del = jobs(assert(DocLifecycle.deleteDocChunks(spark, dir,
+        Seq(base + 3, base + 4), nlist) === 2L))
+      (up, del, app)
+    }
+    IvfCatalog.appendChunks(spark, dir,
+      chunksOf((0 until 5).map(i => oneChunk(950000L + i, "fresh"))), nlist)
+    round(0) // warm: first-use code paths and metadata memos
+    // upsert: the revision/id collect (1 shuffle + 1 result), the assigned
+    // chunks' facts, old cells, removed rows (1 each), the flag kernel's
+    // batch read (1) and pairs (3), the doc→cells append (1) and the store
+    // rewrite (2)
+    assert(round(1) === ((12, 4, 4)), "(upsert, delete, appendChunks) jobs")
+    Seq(storeName, centName, idxName).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("doc→cells appends write one file per non-empty bucket and stay bucketed") {
+    val nlist = 73
+    val storeName = TableStore.tableName(s"ivfchunks$nlist", dir)
+    val centName = TableStore.tableName(s"ivfchunkcent$nlist", dir)
+    val idxName = DocLifecycle.docCellsName(dir, nlist)
+    Seq(storeName, centName, idxName).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    IvfCatalog.assignedChunks(spark, dir, nlist).count()
+    DocLifecycle.docCells(spark, dir, nlist).count()
+    def livePairs(): Set[(Long, Long)] = IvfCatalog.assignedChunks(spark, dir, nlist)
+      .select("document_id", "centroid_id").distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    def indexRows(): Seq[(Long, Long)] = DocLifecycle.docCells(spark, dir, nlist)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(bucketFiles(idxName).values.forall(_.size == 1), "the build writes one file per bucket")
+    for (k <- 0 until 3) {
+      val before = bucketFiles(idxName)
+      IvfCatalog.appendChunks(spark, dir,
+        chunksOf((0 until 12).map(i => oneChunk(960000L + 100 * k + i, s"append$k"))), nlist)
+      val written = bucketFiles(idxName).map { case (b, fs) =>
+        b -> fs.filterNot(before.getOrElse(b, Nil).contains) }.filter(_._2.nonEmpty)
+      assert(written.nonEmpty && written.values.forall(_.size == 1),
+        s"append $k wrote more than one file into a bucket: $written")
+      val rows = indexRows()
+      assert(rows.size === rows.distinct.size, "a pair listed twice")
+      assert(rows.toSet === livePairs(), "the index must list exactly the live pairs")
+    }
+    assert(bucketFiles(idxName).values.exists(_.size > 1), "appends accrue files per bucket")
+    // still a bucketed table: metadata, and a group-by on the bucket key plans no shuffle
+    assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(idxName, Some("default")))
+      .bucketSpec === Some(BucketSpec(32, Seq("document_id"), Seq("document_id"))))
+    val grouped = DocLifecycle.docCells(spark, dir, nlist).groupBy("document_id").count()
+    assert(!grouped.queryExecution.executedPlan.toString.contains("Exchange"),
+      grouped.queryExecution.executedPlan.toString)
+    DocLifecycle.compactDocCells(spark, dir, nlist)
+    assert(bucketFiles(idxName).values.forall(_.size == 1),
+      "compaction folds back to one file per bucket")
+    assert(indexRows().toSet === livePairs())
+    Seq(storeName, centName, idxName).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 }
