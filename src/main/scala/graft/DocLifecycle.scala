@@ -517,15 +517,16 @@ object DocLifecycle {
     // side excludes the documents' own OUTGOING rows, so a flag never points
     // at an id this call removes. Read once before the rewrite, one
     // counterpart per id per partition (a bulk batch ships ids, not pairs),
-    // then a broadcast map. Auto dispatch: micro-batch → batched kernel, bulk → distributed
+    // then a broadcast map. The kernel routes a micro-batch to its batched
+    // form and a bulk batch to the distributed one
     val flags: Map[String, String] = if (!flagNearDups) Map.empty else {
       import spark.implicits._
       val least = graft.functions.Orderings.utf8
-      graft.operators.Dedup.embeddingPairsCelledIncrementalByIdAuto(
+      graft.operators.Dedup.embeddingPairsCelledIncremental(
           assigned.select(col("chunk_id"), col("embedding")),
           eids.drop(spark.table(store)),
           IvfCatalog.chunkCentroidsStored(spark, dir, nlist, trained, gen = g),
-          flagMinCosine, batchRows = nAdded, nprobe = flagNprobe)
+          flagMinCosine, batchRows = nAdded, nprobe = flagNprobe, idCol = "chunk_id")
         .select("left_id", "right_id").as[(String, String)]
         .flatMap { case (a, b) => Seq(a -> b, b -> a) }
         .mapPartitions(_.foldLeft(Map.empty[String, String]) { case (m, (a, b)) =>

@@ -71,7 +71,7 @@ object IngestBench {
     val bn = batch.count()
     val pairs = timed(s"flag increment ($bn vectors vs stored index)") {
       Dedup.embeddingPairsCelledIncremental(batch, store, cents,
-        minCosine = 0.9, nprobe = 2).count()
+        minCosine = 0.9, batchRows = bn, nprobe = 2).count()
     }
     println(s"[ingest] flagged pairs: $pairs")
     timed(s"append increment ($bn vectors into the cell partitioning)") {

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
+
+import graft.functions.VectorFunctions.cosineArrays
 
 /** Training-data deduplication suite (builder north star: dedup operators a
   * large-scale LLM data pipeline needs, beyond the reference's own surface).
@@ -222,8 +224,8 @@ object Dedup {
   /** Default per-bucket cap for the banded self-joins ([[capBuckets]]). */
   val HotBucketCap = 4096
 
-  /** Largest batch the BATCHED incremental flag kernels accept before the
-    * dispatchers below route back to the distributed shuffle kernels. The
+  /** Largest batch [[embeddingPairsCelledIncremental]] hands to its batched
+    * kernel before it routes to the distributed shuffle kernel. The
     * batched form collects the batch's embeddings driver-side and resolves
     * new×new pairs in a driver loop — per-cell O(B²) worst case — so it is
     * sized for MICRO-batches (the ingest loop's contract; the ×10000
@@ -233,38 +235,6 @@ object Dedup {
     * upsertDocChunks explicitly supports — keeps the fully distributed
     * kernel instead of OOMing the driver. */
   val BatchedFlagMaxRows = 20000L
-
-  /** Route an incremental flag batch to the batched-probe kernel (zero
-    * store-side shuffle — the decade-measured hot path) when the batch is
-    * micro-batch-sized, and to the distributed shuffle kernel when it is
-    * bulk. `batchRows` is the batch's row count, which every caller
-    * already has from its own dedup/count step. */
-  def embeddingPairsCelledIncrementalByIdAuto(newVecs: DataFrame, assignedStore: DataFrame,
-                                              centroids: DataFrame, minCosine: Double,
-                                              batchRows: Long,
-                                              nprobe: Int = 2,
-                                              idCol: String = "chunk_id",
-                                              embCol: String = "embedding"): DataFrame =
-    if (batchRows <= BatchedFlagMaxRows)
-      embeddingPairsCelledIncrementalByIdBatched(newVecs, assignedStore, centroids,
-        minCosine, nprobe, idCol, embCol)
-    else
-      embeddingPairsCelledIncrementalById(newVecs, assignedStore, centroids,
-        minCosine, nprobe, idCol, embCol)
-
-  /** Long-id twin of [[embeddingPairsCelledIncrementalByIdAuto]]. */
-  def embeddingPairsCelledIncrementalAuto(newVecs: DataFrame, assignedStore: DataFrame,
-                                          centroids: DataFrame, minCosine: Double,
-                                          batchRows: Long,
-                                          nprobe: Int = 2,
-                                          idCol: String = "vec_id",
-                                          embCol: String = "embedding"): DataFrame =
-    if (batchRows <= BatchedFlagMaxRows)
-      embeddingPairsCelledIncrementalBatched(newVecs, assignedStore, centroids,
-        minCosine, nprobe, idCol, embCol)
-    else
-      embeddingPairsCelledIncremental(newVecs, assignedStore, centroids,
-        minCosine, nprobe, idCol, embCol)
 
   /** The production guard for LSH banding's known pathology: D documents
     * sharing one bucket (near-identical boilerplate — cookie banners,
@@ -704,216 +674,169 @@ object Dedup {
     * exact cosine, canonical (left < right). Recall: a new×corpus pair is
     * found iff the corpus vector's stored top-1 cell is among the new
     * vector's top-`nprobe` cells — the multi-probe overlap, 1.0 for
-    * near-identical vectors. Ids must be unique across both inputs. */
+    * near-identical vectors. Ids must be unique across both inputs.
+    *
+    * The id column's type decides the order: integral ids compare as long,
+    * string ids (the chunk store's md5 ids) in UTF-8 binary order
+    * ([[graft.functions.Orderings.utf8]], Spark's own string sort); any
+    * other type fails. `batchRows` is the batch's row count, which every
+    * caller already has from its own dedup/count step: up to
+    * [[BatchedFlagMaxRows]] the batch takes [[celledIncrementalBatched]]
+    * (store rows scored in place, no store-side shuffle — the
+    * decade-measured hot path), above it [[celledIncrementalDistributed]],
+    * which keeps a bulk re-crawl off the driver. Both return the same rows
+    * (OperatorSpec pins the grid of id types × routes). */
   def embeddingPairsCelledIncremental(newVecs: DataFrame, assignedStore: DataFrame,
                                       centroids: DataFrame, minCosine: Double,
+                                      batchRows: Long,
                                       nprobe: Int = 2,
                                       idCol: String = "vec_id",
                                       embCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorFunctions.cosineArrays
-    val spark = newVecs.sparkSession
+    import org.apache.spark.sql.Encoder
+    import org.apache.spark.sql.types._
+    def route[K](idCast: String, ord: Ordering[K], idEnc: Encoder[K]): DataFrame =
+      if (batchRows <= BatchedFlagMaxRows)
+        celledIncrementalBatched(newVecs, assignedStore, centroids, minCosine, nprobe,
+          idCol, embCol, idCast, ord, idEnc)
+      else
+        celledIncrementalDistributed(newVecs, assignedStore, centroids, minCosine, nprobe,
+          idCol, embCol, idCast, idEnc)
+    newVecs.schema(idCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+        route[Long]("long", Ordering.Long, Encoders.scalaLong)
+      case StringType =>
+        route[String]("string", graft.functions.Orderings.utf8, Encoders.STRING)
+      case other => throw new IllegalArgumentException(
+        s"embeddingPairsCelledIncremental id column '$idCol' must be integral or string, " +
+          s"got ${other.catalogString}")
+    }
+  }
+
+  /** The `probes` cells nearest to `v`: cosine descending, ties by cell id
+    * ascending — the probe ranking of every celled kernel (batch, stream,
+    * incremental). Kept apart from `Similarity.nearestCells`, which orders
+    * NaN and ±0.0 as Spark's `ORDER BY` does; oracles pin both orders. */
+  private[graft] def topCells(cents: Array[(Long, Array[Float])], v: Array[Float],
+                              probes: Int): Array[Long] =
+    cents.map { case (cid, cv) => (cid, cosineArrays(v, cv)) }
+      .sortBy { case (cid, cos) => (-cos, cid) }
+      .take(probes).map(_._1)
+
+  /** One cell's pairs: every (i < j) pair of `buf` (id, vector, is-new)
+    * with at least one new side and cosine ≥ `bar`, as (id_i, id_j, cos). */
+  private def cellPairLoop[K](buf: collection.IndexedSeq[(K, Array[Float], Boolean)],
+                              bar: Double): Iterator[(K, K, Double)] =
+    for {
+      i <- buf.indices.iterator
+      j <- (i + 1 until buf.length).iterator
+      if buf(i)._3 || buf(j)._3
+      cos = cosineArrays(buf(i)._2, buf(j)._2)
+      if cos >= bar
+    } yield (buf(i)._1, buf(j)._1, cos)
+
+  /** The shuffle-shaped celled kernel: `celled` rows (__cell long, __id,
+    * __emb, __new) are shuffled by cell and id-sorted, and each cell is
+    * buffered and scored by [[cellPairLoop]] in memory — a candidate join
+    * is never materialized. Output (left_id, right_id, cosine), left <
+    * right in Spark's id order. */
+  private def cellPairs[K](celled: DataFrame, minCosine: Double,
+                           idEnc: org.apache.spark.sql.Encoder[K]): DataFrame = {
+    val spark = celled.sparkSession
     import spark.implicits._
+    val bar = minCosine
+    celled
+      .repartition(col("__cell"))
+      .sortWithinPartitions(col("__cell"), col("__id"))
+      .as(Encoders.tuple(Encoders.scalaLong, idEnc, newFloatArrayEncoder, Encoders.scalaBoolean))
+      .mapPartitions { it =>
+        val rows = it.buffered
+        new Iterator[Iterator[(K, K, Double)]] {
+          def hasNext: Boolean = rows.hasNext
+          def next(): Iterator[(K, K, Double)] = {
+            val cell = rows.head._1
+            val buf = scala.collection.mutable.ArrayBuffer.empty[(K, Array[Float], Boolean)]
+            while (rows.hasNext && rows.head._1 == cell)
+              { val r = rows.next(); buf += ((r._2, r._3, r._4)) }
+            cellPairLoop(buf, bar)
+          }
+        }.flatten
+      }(Encoders.tuple(idEnc, idEnc, Encoders.scalaDouble))
+      .toDF("left_id", "right_id", "cosine")
+      // a pair sharing two probed cells is emitted twice with identical
+      // values (same kernel, same inputs) — one distinct removes the copy
+      .distinct()
+  }
+
+  /** The distributed kernel of [[embeddingPairsCelledIncremental]]: the
+    * batch's rows, exploded to their probed cells, and the probed cells'
+    * STORE rows are unioned and shuffled by cell into [[cellPairs]]. Every
+    * step stays on the executors, so it is the bulk route — but each call
+    * shuffles every probed cell's store rows, so it grows with the STORE:
+    * at law nlist a 500-chunk batch probes ~13% of a 50M-chunk store
+    * (×10000: 232–266 s flag vs 41.8 s append floor — SCALE.md round 15). */
+  private[graft] def celledIncrementalDistributed[K](
+      newVecs: DataFrame, assignedStore: DataFrame, centroids: DataFrame,
+      minCosine: Double, nprobe: Int, idCol: String, embCol: String,
+      idCast: String, idEnc: org.apache.spark.sql.Encoder[K]): DataFrame = {
+    val spark = newVecs.sparkSession
     val cents = graft.IndexMeta.centroids(centroids)
     require(cents.nonEmpty, "embeddingPairsCelledIncremental needs centroids")
     val bc = spark.sparkContext.broadcast(cents)
     val probes = math.min(nprobe, cents.length)
-    val topCellsUdf = udf { (v: Seq[Float]) =>
-      val a = v.toArray
-      bc.value.map { case (cid, cv) => (cid, cosineArrays(a, cv)) }
-        .sortBy { case (cid, cos) => (-cos, cid) }
-        .take(probes).map(_._1)
-    }
+    val topCellsUdf = udf((v: Seq[Float]) => topCells(bc.value, v.toArray, probes))
     val batchCelled = newVecs.filter(col(embCol).isNotNull)
       .select(explode(topCellsUdf(col(embCol))).as("__cell"),
-        col(idCol).cast("long").as("__id"), col(embCol).as("__emb"),
+        col(idCol).cast(idCast).as("__id"), col(embCol).as("__emb"),
         lit(true).as("__new"))
     // the batch's probed cells — bounded by nlist, resolved driver-side so
     // the store filter is a STATIC IN over the partition key
     val probed = batchCelled.select("__cell").distinct().collect().map(_.getLong(0))
     // null embeddings are a supported input shape (ivfAssign keeps them, so
-    // a stored index may contain them) — drop them here like the batch side,
-    // or the kernel would NPE on r._3.toArray
+    // a stored index may contain them) — drop them here like the batch side
     val storeCelled = assignedStore
       .filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
       .filter(col(embCol).isNotNull)
       .select(col("centroid_id").cast("long").as("__cell"),
-        col(idCol).cast("long").as("__id"), col(embCol).as("__emb"),
+        col(idCol).cast(idCast).as("__id"), col(embCol).as("__emb"),
         lit(false).as("__new"))
-    val bar = minCosine
-    batchCelled.unionByName(storeCelled)
-      .repartition(col("__cell"))
-      .sortWithinPartitions(col("__cell"), col("__id"))
-      .as[(Long, Long, Seq[Float], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        new Iterator[Iterator[(Long, Long, Double)]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Iterator[(Long, Long, Double)] = {
-            val cell = rows.head._1
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float], Boolean)]
-            while (rows.hasNext && rows.head._1 == cell)
-              { val r = rows.next(); buf += ((r._2, r._3.toArray, r._4)) }
-            for {
-              i <- buf.indices.iterator
-              j <- (i + 1 until buf.length).iterator
-              if buf(i)._3 || buf(j)._3 // at least one side is new
-              cos = cosineArrays(buf(i)._2, buf(j)._2)
-              if cos >= bar
-            } yield (buf(i)._1, buf(j)._1, cos)
-          }
-        }.flatten
-      }
-      .toDF("left_id", "right_id", "cosine")
-      .distinct()
+    cellPairs(batchCelled.unionByName(storeCelled), minCosine, idEnc)
   }
 
-  /** [[embeddingPairsCelledIncremental]] for corpora whose ids are STRINGS
-    * (the flagship chunk store's md5 chunk ids) — same celled incremental
-    * dataflow: batch probes its top-`nprobe` cells, the store scan prunes
-    * to those partition directories, pairs are exact cosine with at least
-    * one new side. Canonical order is lexicographic (left < right as
-    * strings) — the string-keyed twin of the long kernel's numeric
-    * canonicalization, kept separate because the long kernel's pair
-    * orientation is oracle-pinned. */
-  def embeddingPairsCelledIncrementalById(newVecs: DataFrame, assignedStore: DataFrame,
-                                          centroids: DataFrame, minCosine: Double,
-                                          nprobe: Int = 2,
-                                          idCol: String = "chunk_id",
-                                          embCol: String = "embedding"): DataFrame = {
-    import graft.functions.VectorFunctions.cosineArrays
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    val cents = graft.IndexMeta.centroids(centroids)
-    require(cents.nonEmpty, "embeddingPairsCelledIncrementalById needs centroids")
-    val bc = spark.sparkContext.broadcast(cents)
-    val probes = math.min(nprobe, cents.length)
-    val topCellsUdf = udf { (v: Seq[Float]) =>
-      val a = v.toArray
-      bc.value.map { case (cid, cv) => (cid, cosineArrays(a, cv)) }
-        .sortBy { case (cid, cos) => (-cos, cid) }
-        .take(probes).map(_._1)
-    }
-    val batchCelled = newVecs.filter(col(embCol).isNotNull)
-      .select(explode(topCellsUdf(col(embCol))).as("__cell"),
-        col(idCol).cast("string").as("__id"), col(embCol).as("__emb"),
-        lit(true).as("__new"))
-    val probed = batchCelled.select("__cell").distinct().collect().map(_.getLong(0))
-    val storeCelled = assignedStore
-      .filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
-      .filter(col(embCol).isNotNull)
-      .select(col("centroid_id").cast("long").as("__cell"),
-        col(idCol).cast("string").as("__id"), col(embCol).as("__emb"),
-        lit(false).as("__new"))
-    val bar = minCosine
-    batchCelled.unionByName(storeCelled)
-      .repartition(col("__cell"))
-      .sortWithinPartitions(col("__cell"), col("__id"))
-      .as[(Long, String, Seq[Float], Boolean)]
-      .mapPartitions { it =>
-        val rows = it.buffered
-        new Iterator[Iterator[(String, String, Double)]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Iterator[(String, String, Double)] = {
-            val cell = rows.head._1
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Float], Boolean)]
-            while (rows.hasNext && rows.head._1 == cell)
-              { val r = rows.next(); buf += ((r._2, r._3.toArray, r._4)) }
-            for {
-              i <- buf.indices.iterator
-              j <- (i + 1 until buf.length).iterator
-              if buf(i)._3 || buf(j)._3 // at least one side is new
-              cos = cosineArrays(buf(i)._2, buf(j)._2)
-              if cos >= bar
-            } yield (buf(i)._1, buf(j)._1, cos)
-          }
-        }.flatten
-      }
-      .toDF("left_id", "right_id", "cosine")
-      .distinct()
-  }
-
-  /** BATCHED-PROBE form of [[embeddingPairsCelledIncremental]] — identical
-    * output (same pairs, same canonical order, same recall contract), a
-    * fundamentally different dataflow sized for the ingest hot path at
-    * decade scale. The original kernel `repartition(__cell)`s the union of
-    * batch and every probed cell's STORE rows; at law nlist a 500-chunk
-    * batch probes ~2·nprobe·batch distinct cells ≈ 13% of a 50M-chunk
-    * store, so each micro-batch pays a corpus-scale shuffle that grows
-    * with the STORE, not the batch (measured ×10000: 232–266 s flag vs
-    * 41.8 s append floor — SCALE.md round 15).
-    *
-    * This form is the [[graft.operators.Similarity.pqSearchBatch]]
-    * dataflow: the batch (broadcast-scale BY CONTRACT, like every
-    * micro-batch and every batch-query table in this library) is collected
-    * once, its top-`nprobe` cells computed driver-side, and the per-cell
+  /** The batched kernel of [[embeddingPairsCelledIncremental]] — the same
+    * pairs as [[celledIncrementalDistributed]], a dataflow sized for the
+    * ingest hot path at decade scale, where the distributed kernel's
+    * per-batch store shuffle dominates. It is the dataflow of
+    * [[graft.operators.Similarity.pqSearchBatch]]: the batch
+    * (broadcast-scale BY CONTRACT, like every micro-batch and every
+    * batch-query table in this library) is collected once, its
+    * top-`nprobe` cells computed driver-side, and the per-cell
     * query lists broadcast; the store scan then prunes to the probed
-    * partition directories (static IN over the partition key, same as the
-    * original) and each store row is scored IN PLACE against the ≤
-    * batch-sized query list of its own cell — zero store-side shuffle,
-    * zero store rows moved. new×new pairs are resolved driver-side over
-    * the collected batch (the per-cell double loop the executor kernel ran,
-    * restricted to new rows), deduped across shared cells exactly as the
-    * original's trailing `.distinct()` did.
+    * partition directories (static IN over the partition key) and each
+    * store row is scored IN PLACE against the ≤ batch-sized query list of
+    * its own cell — zero store-side shuffle, zero store rows moved.
+    * new×new pairs are resolved driver-side over the collected batch by
+    * the same [[cellPairLoop]], deduped across shared cells.
     *
-    * Parity argument, pinned row-equal by OperatorSpec on the planted
-    * fixture and oracle-checked end-to-end by `dedup_celled_incremental`:
-    * a (new, stored) pair survives iff the stored row's top-1 cell is
-    * among the new row's top-`nprobe` cells — here that is literally "the
-    * store row's own partition key appears in the broadcast probe map";
-    * a (new, new) pair survives iff the two share ≥1 probed cell — the
-    * driver loop iterates the same per-cell buffers. Cosines come from the
-    * same [[graft.functions.VectorFunctions.cosineArrays]] kernel on both
-    * sides, so values are bit-identical. */
-  def embeddingPairsCelledIncrementalBatched(newVecs: DataFrame, assignedStore: DataFrame,
-                                             centroids: DataFrame, minCosine: Double,
-                                             nprobe: Int = 2,
-                                             idCol: String = "vec_id",
-                                             embCol: String = "embedding"): DataFrame = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    celledIncrementalBatchedCore[Long](newVecs, assignedStore, centroids,
-      minCosine, nprobe, idCol, embCol, "long")(
-      Ordering.Long, implicitly, implicitly, implicitly)
-  }
-
-  /** String-id twin of [[embeddingPairsCelledIncrementalBatched]] (the
-    * flagship chunk store's md5 chunk ids) — the batched replacement for
-    * [[embeddingPairsCelledIncrementalById]], same output. Canonical pair
-    * order uses UTF-8 binary comparison ([[graft.functions.Orderings.utf8]])
-    * so left < right agrees byte-for-byte with the original kernel's
-    * Spark-side string sort. */
-  def embeddingPairsCelledIncrementalByIdBatched(newVecs: DataFrame, assignedStore: DataFrame,
-                                                 centroids: DataFrame, minCosine: Double,
-                                                 nprobe: Int = 2,
-                                                 idCol: String = "chunk_id",
-                                                 embCol: String = "embedding"): DataFrame = {
-    val spark = newVecs.sparkSession
-    import spark.implicits._
-    celledIncrementalBatchedCore[String](newVecs, assignedStore, centroids,
-      minCosine, nprobe, idCol, embCol, "string")(
-      graft.functions.Orderings.utf8, implicitly, implicitly, implicitly)
-  }
-
-  /** Shared core of the two batched incremental kernels. `idCast` is the
-    * Spark cast target for the id column ("long" | "string"); `ord` gives
-    * the canonicalization (numeric vs UTF-8 binary). The store-side pass
-    * emits each (new, stored) pair at most once (a store row lives in
-    * exactly ONE cell), so only the driver-resolved new×new set needs
-    * cross-cell dedup; the trailing distinct is kept anyway for exact
-    * behavioral parity with the original kernels on degenerate stores
-    * (duplicate ids). */
-  private def celledIncrementalBatchedCore[K](
+    * Parity argument: a (new, stored) pair survives iff the stored row's
+    * top-1 cell is among the new row's top-`nprobe` cells — here that is
+    * literally "the store row's own partition key appears in the broadcast
+    * probe map"; a (new, new) pair survives iff the two share ≥1 probed
+    * cell — the driver loop iterates the same per-cell buffers. Cosines
+    * come from the same [[graft.functions.VectorFunctions.cosineArrays]]
+    * fold on both sides, so values are bit-identical. `ord` is the
+    * driver-side twin of Spark's id order (numeric or UTF-8 binary). The
+    * store-side pass emits each (new, stored) pair at most once (a store
+    * row lives in exactly ONE cell); the trailing distinct keeps parity
+    * with the distributed kernel on degenerate stores (duplicate ids). */
+  private[graft] def celledIncrementalBatched[K](
       newVecs: DataFrame, assignedStore: DataFrame, centroids: DataFrame,
       minCosine: Double, nprobe: Int, idCol: String, embCol: String,
-      idCast: String)(
-      implicit ord: Ordering[K],
-      kct: scala.reflect.ClassTag[K],
-      storeEnc: org.apache.spark.sql.Encoder[(Long, K, Seq[Float])],
-      pairEnc: org.apache.spark.sql.Encoder[(K, K, Double)]): DataFrame = {
-    import graft.functions.VectorFunctions.cosineArrays
+      idCast: String, ord: Ordering[K], idEnc: org.apache.spark.sql.Encoder[K]): DataFrame = {
     val spark = newVecs.sparkSession
+    import spark.implicits._
+    val pairEnc = Encoders.tuple(idEnc, idEnc, Encoders.scalaDouble)
     val cents = graft.IndexMeta.centroids(centroids)
-    require(cents.nonEmpty, "celledIncrementalBatched needs centroids")
+    require(cents.nonEmpty, "embeddingPairsCelledIncremental needs centroids")
     val probes = math.min(nprobe, cents.length)
     // batch collected ONCE — broadcast-scale by contract (micro-batches);
     // probing runs driver-side over the same collected array, so the
@@ -924,55 +847,37 @@ object Dedup {
       .collect()
       .map(r => (r.get(0).asInstanceOf[K], r.getSeq[Float](1).toArray))
     if (batchRows.isEmpty)
-      return spark.emptyDataset(pairEnc)
-        .toDF("left_id", "right_id", "cosine")
-    val topCells: Array[Array[Long]] = batchRows.map { case (_, v) =>
-      cents.map { case (cid, cv) => (cid, cosineArrays(v, cv)) }
-        .sortBy { case (cid, cos) => (-cos, cid) }
-        .take(probes).map(_._1)
-    }
+      return spark.emptyDataset(pairEnc).toDF("left_id", "right_id", "cosine")
     // cell → indices of the batch vectors probing it
-    val byCell: Map[Long, Array[Int]] = topCells.zipWithIndex
-      .flatMap { case (cells, i) => cells.map(c => (c, i)) }
+    val byCell: Seq[(Long, Array[Int])] = batchRows.zipWithIndex
+      .flatMap { case ((_, v), i) => topCells(cents, v, probes).map(c => (c, i)) }
       .groupBy(_._1).map { case (c, xs) => (c, xs.map(_._2).sorted) }
+      .toSeq.sortBy(_._1)
     val bar = minCosine
-    // driver-resolved new×new pairs: the per-cell double loop of the
-    // original kernel restricted to new rows, deduped across shared cells
-    val newNew = scala.collection.mutable.LinkedHashSet.empty[(K, K, Double)]
-    byCell.toSeq.sortBy(_._1).foreach { case (_, idxs) =>
-      var i = 0
-      while (i < idxs.length) {
-        var j = i + 1
-        while (j < idxs.length) {
-          val (ia, ib) = (idxs(i), idxs(j))
-          val cos = cosineArrays(batchRows(ia)._2, batchRows(ib)._2)
-          if (cos >= bar) {
-            val (a, b) = (batchRows(ia)._1, batchRows(ib)._1)
-            newNew += (if (ord.lt(a, b)) (a, b, cos) else (b, a, cos))
-          }
-          j += 1
-        }
-        i += 1
-      }
-    }
-    val probed = byCell.keys.toArray.sorted
+    // driver-resolved new×new pairs, canonicalized and deduped across
+    // shared cells
+    val newNew = byCell.flatMap { case (_, idxs) =>
+      cellPairLoop(idxs.toIndexedSeq.map(i => (batchRows(i)._1, batchRows(i)._2, true)), bar)
+        .map { case (a, b, cos) => if (ord.lt(a, b)) (a, b, cos) else (b, a, cos) }
+    }.distinct
     // store scan pruned to the probed partition directories (static IN,
-    // same pruning PlanSpec pins on the original kernel) and scored IN
-    // PLACE by a BROADCAST join against the tiny (cell, query) table —
-    // store rows stream through whole-stage codegen (the codegen cosine
-    // expression, bit-identical fold to cosineArrays) instead of being
-    // deserialized into Scala objects per row — the decade priced the
-    // mapPartitions form's ~7M-row Seq[Float] decode at ~100 s of the
-    // 140 s flagged batch. No repartition; no store row leaves its split.
-    val probeRows: Seq[(Long, K, Seq[Float])] = byCell.toSeq.sortBy(_._1).flatMap {
-      case (cell, idxs) => idxs.map(i => (cell, batchRows(i)._1, batchRows(i)._2.toSeq))
+    // the pruning PlanSpec pins) and scored IN PLACE by a BROADCAST join
+    // against the tiny (cell, query) table — store rows stream through
+    // whole-stage codegen (the codegen cosine expression, bit-identical
+    // fold to cosineArrays) instead of being deserialized into Scala
+    // objects per row — the decade priced the mapPartitions form's ~7M-row
+    // Seq[Float] decode at ~100 s of the 140 s flagged batch. No
+    // repartition; no store row leaves its split.
+    val probeRows: Seq[(Long, K, Array[Float])] = byCell.flatMap {
+      case (cell, idxs) => idxs.map(i => (cell, batchRows(i)._1, batchRows(i)._2))
     }
-    val probesDf = spark.createDataset(probeRows)(storeEnc)
+    val probesDf = spark.createDataset(probeRows)(
+        Encoders.tuple(Encoders.scalaLong, idEnc, newFloatArrayEncoder))
       .toDF("centroid_id", "__qid", "__qvec")
     val sid = col(idCol).cast(idCast)
     val qid = col("__qid")
     val storePairs = assignedStore
-      .filter(col("centroid_id").isin(probed.toIndexedSeq: _*))
+      .filter(col("centroid_id").isin(byCell.map(_._1): _*))
       .filter(col(embCol).isNotNull)
       .select(col("centroid_id").cast("long").as("centroid_id"),
         col(idCol).cast(idCast).as(idCol), col(embCol))
@@ -984,9 +889,8 @@ object Dedup {
         when(qid < sid, qid).otherwise(sid).as("left_id"),
         when(qid < sid, sid).otherwise(qid).as("right_id"),
         col("__cos").as("cosine"))
-      .as[(K, K, Double)](pairEnc)
-    val newNewDs = spark.createDataset(newNew.toSeq)(pairEnc)
-    storePairs.union(newNewDs)
+      .as(pairEnc)
+    storePairs.union(spark.createDataset(newNew)(pairEnc))
       .toDF("left_id", "right_id", "cosine")
       .distinct()
   }
@@ -1034,9 +938,7 @@ object Dedup {
                            idCol: String = "vec_id", embCol: String = "embedding",
                            centroids: Option[DataFrame] = None,
                            coarseProbes: Option[Int] = None): DataFrame = {
-    import graft.functions.VectorFunctions.cosineArrays
     val spark = emb.sparkSession
-    import spark.implicits._
     val centDf = centroids.getOrElse(
       Similarity.seededCentroids(emb, nlist, step, idCol, embCol))
     // index metadata: tiny by construction (nlist rows)
@@ -1055,12 +957,7 @@ object Dedup {
     // recall loss is the probability a true top cell hides in an unopened
     // coarse group, driven down by w — measured in SCALE.md, not assumed.
     val topCellsUdf = coarseProbes match {
-      case None => udf { (v: Seq[Float]) =>
-        val a = v.toArray
-        bc.value.map { case (cid, cv) => (cid, cosineArrays(a, cv)) }
-          .sortBy { case (cid, cos) => (-cos, cid) } // deterministic tie-break
-          .take(probes).map(_._1)
-      }
+      case None => udf((v: Seq[Float]) => topCells(bc.value, v.toArray, probes))
       case Some(w) =>
         val nCoarse = math.max(1, math.sqrt(cents.length.toDouble).round.toInt)
         val stride = math.max(1, cents.length / nCoarse)
@@ -1089,44 +986,14 @@ object Dedup {
           val opened = reps.indices
             .map(p => (p, cosineArrays(a, reps(p))))
             .sortBy { case (p, cos) => (-cos, p) }.take(wOpen).map(_._1)
-          opened.iterator.flatMap(p => grps(p).iterator)
-            .map { case (cid, cv) => (cid, cosineArrays(a, cv)) }
-            .toArray
-            .sortBy { case (cid, cos) => (-cos, cid) }
-            .take(probes).map(_._1)
+          topCells(opened.iterator.flatMap(p => grps(p).iterator).toArray, a, probes)
         }
     }
-    val bar = minCosine
-    emb.filter(col(embCol).isNotNull)
+    // every row counts as new, so the kernel scores every same-cell pair
+    cellPairs(emb.filter(col(embCol).isNotNull)
       .select(explode(topCellsUdf(col(embCol))).as("__cell"),
-        col(idCol).cast("long").as("__id"), col(embCol).as("__emb"))
-      .repartition(col("__cell"))
-      .sortWithinPartitions(col("__cell"), col("__id"))
-      .as[(Long, Long, Array[Float])]
-      .mapPartitions { it =>
-        // rows arrive cell-contiguous and id-ascending: buffer one cell,
-        // pairwise-score it in memory, emit survivors, move on
-        val rows = it.buffered
-        new Iterator[Iterator[(Long, Long, Double)]] {
-          def hasNext: Boolean = rows.hasNext
-          def next(): Iterator[(Long, Long, Double)] = {
-            val cell = rows.head._1
-            val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Array[Float])]
-            while (rows.hasNext && rows.head._1 == cell)
-              { val r = rows.next(); buf += ((r._2, r._3)) }
-            for {
-              i <- buf.indices.iterator
-              j <- (i + 1 until buf.length).iterator
-              cos = cosineArrays(buf(i)._2, buf(j)._2)
-              if cos >= bar
-            } yield (buf(i)._1, buf(j)._1, cos)
-          }
-        }.flatten
-      }
-      .toDF("left_id", "right_id", "cosine")
-      // a pair sharing BOTH probe cells is emitted twice with identical
-      // values (same kernel, same inputs) — one distinct removes the copy
-      .distinct()
+        col(idCol).cast("long").as("__id"), col(embCol).as("__emb"), lit(true).as("__new")),
+      minCosine, Encoders.scalaLong)
   }
 
   // ------------------------------------------------- duplicated substrings

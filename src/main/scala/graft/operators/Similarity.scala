@@ -569,12 +569,8 @@ object Similarity {
                             preFilter: Column,
                             idCol: String = "vec_id", embCol: String = "embedding",
                             filteredRows: Long = -1L,
-                            minSurvivorsPerK: Double = 10.0): DataFrame = {
-    val nlist = graft.IndexMeta.centroids(centroids).length
-    val fRows =
-      if (filteredRows >= 0L) filteredRows
-      else assigned.filter(preFilter).count()
-    if (expectedProbedSurvivors(fRows, nprobe, nlist) >= minSurvivorsPerK * k)
+                            minSurvivorsPerK: Double = 10.0): DataFrame =
+    if (probeViable(assigned, centroids, k, nprobe, preFilter, filteredRows, minSurvivorsPerK))
       ivfSearchPruned(assigned, centroids, queryVec, k, nprobe, idCol, embCol,
         preFilter = Some(preFilter))
     else {
@@ -584,6 +580,19 @@ object Similarity {
         .orderBy(col("score").desc, col(idCol).asc)
         .limit(k)
     }
+
+  /** The probe/brute decision of [[ivfSearchFilteredAuto]] and its batch
+    * form: is the filter's expected survivor count inside the probed cells
+    * at least `minSurvivorsPerK`·k? `filteredRows` < 0 counts the filter
+    * here with a column-pruned scan. */
+  private def probeViable(assigned: DataFrame, centroids: DataFrame, k: Int, nprobe: Int,
+                          preFilter: Column, filteredRows: Long,
+                          minSurvivorsPerK: Double): Boolean = {
+    val nlist = graft.IndexMeta.centroids(centroids).length
+    val fRows =
+      if (filteredRows >= 0L) filteredRows
+      else assigned.filter(preFilter).count()
+    expectedProbedSurvivors(fRows, nprobe, nlist) >= minSurvivorsPerK * k
   }
 
   /** N43 on the BATCH surface: the filtered probe/brute auto-switch for a
@@ -606,18 +615,13 @@ object Similarity {
                                  idCol: String = "vec_id", embCol: String = "embedding",
                                  qidCol: String = "qid", qvecCol: String = "qvec",
                                  filteredRows: Long = -1L,
-                                 minSurvivorsPerK: Double = 10.0): DataFrame = {
-    val nlist = graft.IndexMeta.centroids(centroids).length
-    val fRows =
-      if (filteredRows >= 0L) filteredRows
-      else assigned.filter(preFilter).count()
-    if (expectedProbedSurvivors(fRows, nprobe, nlist) >= minSurvivorsPerK * k)
+                                 minSurvivorsPerK: Double = 10.0): DataFrame =
+    if (probeViable(assigned, centroids, k, nprobe, preFilter, filteredRows, minSurvivorsPerK))
       ivfSearchPrunedBatch(assigned, centroids, queries, k, nprobe, idCol, embCol,
         qidCol, qvecCol, preFilter = Some(preFilter))
     else
       VectorSearch.knnBatch(assigned.filter(preFilter), queries, k, embCol, idCol,
         qidCol, qvecCol)
-  }
 
   /** Micro-batch sizing for the batched probes — the ×10000 serving
     * matrix made into a number (SCALE.md round-16). Batch amortization
@@ -669,41 +673,8 @@ object Similarity {
                            qidCol: String = "qid", qvecCol: String = "qvec",
                            payloadCols: Seq[String] = Nil,
                            preFilter: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = assigned.sparkSession
-    import spark.implicits._
-    val qSelected = queries.select(col(qidCol), col(qvecCol))
-    val qRows = qSelected.collect()
-    require(qRows.nonEmpty, "ivfSearchPrunedBatch needs a non-empty query table")
-    qRows.zipWithIndex.foreach { case (r, i) =>
-      require(!r.isNullAt(1),
-        s"ivfSearchPrunedBatch: query '${r.get(0)}' (row $i) has a null $qvecCol — " +
-          "filter null query embeddings before searching") }
-    val qIndexed = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        qRows.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(i, r.get(0), r.get(1))
-        }.toSeq, 1),
-      StructType(StructField("__qi", IntegerType, nullable = false) +:
-        qSelected.schema.fields))
-    // every query's probe set ranked on the driver by the serial path's
-    // own ranking (nearestCells), so probe sets match it; the (cell, query)
-    // pairs ride a local relation — no Spark job
-    val cellType = assigned.schema("centroid_id").dataType
-    val cents = graft.IndexMeta.centroids(centroids)
-    val probes = qRows.map(r => nearestCells(cents, r.getSeq[Float](1).toArray, nprobe))
-    val pairs = spark.createDataFrame(
-        probes.zipWithIndex.flatMap { case (cs, i) =>
-          cs.map(c => org.apache.spark.sql.Row(c, i, qRows(i).get(1)))
-        }.toSeq.asJava,
-        StructType(Seq(StructField("centroid_id", LongType, nullable = false),
-          StructField("__qi", IntegerType, nullable = false), qSelected.schema(qvecCol))))
-      .select(col("centroid_id").cast(cellType).as("centroid_id"),
-        col("__qi"), col(qvecCol))
-    // the union of probed cells as LITERALS while plan-size-safe (static
-    // partition pruning, not a join the planner may or may not turn into
-    // dynamic pruning); broadcast semi-join past the literal gate
-    val cells = cellValues(probes.flatten.distinct.sorted.toSeq, cellType)
+    val qt = VectorSearch.queryTable(queries, qidCol, qvecCol, "ivfSearchPrunedBatch")
+    val (pairs, pruned) = probeCells(assigned, centroids, qt, nprobe)
     // a QUEUE-wide metadata predicate (tenant, language, label — the same
     // for every query in the batch) composes into the one shared scan,
     // PushedFilters next to PartitionFilters; per-query filters belong on
@@ -712,46 +683,52 @@ object Similarity {
     // ONE definition of the pruned+filtered base scan — the scored pass and
     // the payload re-read must stay the same shape or the payload join's
     // "every winner already satisfies the filter" identity silently breaks
-    val prunedBase = preFilter.foldLeft(filterToCells(assigned, cells,
-      pairs.select(col("centroid_id")).distinct()))(_.filter(_))
+    val prunedBase = preFilter.foldLeft(pruned)(_.filter(_))
     val scored = prunedBase
       .join(broadcast(pairs), "centroid_id")
       .select(col("__qi"), col(idCol).as("__id"),
         ((cosineSimilarity(col(embCol), col(qvecCol)) + 1.0) / 2.0).as("__score"))
-    val idType = assigned.schema(idCol).dataType
-    val aggregated = idType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        val topk = udaf(new graft.functions.TopKAggregator[Long](
-          k, implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Double)]]]))
-        scored.groupBy(col("__qi"))
-          .agg(topk(col("__id").cast("long"), col("__score")).as("__topk"))
-      case StringType =>
-        val topk = udaf(new graft.functions.TopKAggregator[String](
-          k, implicitly[org.apache.spark.sql.Encoder[Seq[(String, Double)]]])(
-          graft.functions.TopKAggregator.utf8Ordering, implicitly))
-        scored.groupBy(col("__qi"))
-          .agg(topk(col("__id"), col("__score")).as("__topk"))
-      case other => throw new IllegalArgumentException(
-        s"ivfSearchPrunedBatch id column '$idCol' must be integral or string, got " +
-          s"${other.catalogString}")
-    }
-    val out = aggregated
-      .select(col("__qi"), posexplode(col("__topk")).as(Seq("__pos", "__hit")))
-      .join(broadcast(qIndexed.select(col("__qi"), col(qidCol))), "__qi")
-      .select(col(qidCol), col("__hit._1").cast(idType).as(idCol),
-        (col("__pos") + 1).cast("int").as("rank"), col("__hit._2").as("score"))
-    if (payloadCols.isEmpty) out
-    else {
-      // attach store payload (e.g. document_id) by re-reading the SAME
-      // pruned+filtered base scan with the Q·k winners broadcast —
-      // candidate-bounded, never a full-store lookup join; a selective
-      // preFilter makes BOTH scans cheaper, not just the first
-      val payload = prunedBase
-        .select((idCol +: payloadCols).map(col): _*)
-      payload.join(broadcast(out), idCol)
-        .select((Seq(qidCol, idCol, "rank", "score") ++ payloadCols).map(col): _*)
-    }
+    withPayload(qt.ranked(VectorSearch.topKPerQuery(scored, k, idCol,
+      assigned.schema(idCol).dataType, "ivfSearchPrunedBatch"), idCol),
+      prunedBase, idCol, qidCol, payloadCols)
   }
+
+  /** The probe skeleton of the batch IVF forms: every query's probe set
+    * ranked on the driver by the serial path's own ranking
+    * ([[nearestCells]]), so probe sets match it; the (centroid_id, __qi,
+    * qvec) pairs as a local relation; and `store` pruned to the union of
+    * probed cells — LITERALS while plan-size-safe (static partition
+    * pruning, not a join the planner may or may not turn into dynamic
+    * pruning), a broadcast semi-join past the literal gate. */
+  private def probeCells(store: DataFrame, centroids: DataFrame, qt: VectorSearch.QueryTable,
+                         nprobe: Int): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
+    val cellType = store.schema("centroid_id").dataType
+    val cents = graft.IndexMeta.centroids(centroids)
+    val probes = qt.vecs.map(nearestCells(cents, _, nprobe))
+    val qvec = qt.indexed.schema.fields(2)
+    val pairs = store.sparkSession.createDataFrame(
+        probes.zipWithIndex.flatMap { case (cs, i) =>
+          cs.map(c => org.apache.spark.sql.Row(c, i, qt.rows(i).get(1)))
+        }.toSeq.asJava,
+        StructType(Seq(StructField("centroid_id", LongType, nullable = false),
+          StructField("__qi", IntegerType, nullable = false), qvec)))
+      .select(col("centroid_id").cast(cellType).as("centroid_id"), col("__qi"), col(qvec.name))
+    val cells = cellValues(probes.flatten.distinct.sorted.toSeq, cellType)
+    (pairs, filterToCells(store, cells, pairs.select(col("centroid_id")).distinct()))
+  }
+
+  /** Attach store payload (e.g. document_id) to the batch probes' (qid,
+    * id, rank, score) rows by re-reading the SAME pruned+filtered `base`
+    * scan with the Q·k winners broadcast — candidate-bounded, never a
+    * full-store lookup join; a selective preFilter makes BOTH scans
+    * cheaper, not just the first. */
+  private def withPayload(out: DataFrame, base: DataFrame, idCol: String, qidCol: String,
+                          payloadCols: Seq[String]): DataFrame =
+    if (payloadCols.isEmpty) out
+    else base.select((idCol +: payloadCols).map(col): _*)
+      .join(broadcast(out), idCol)
+      .select((Seq(qidCol, idCol, "rank", "score") ++ payloadCols).map(col): _*)
 
   /** IVF search: probe the `nprobe` centroids nearest to the query, then
     * exact top-k over the vectors assigned to those cells. */
@@ -783,74 +760,49 @@ object Similarity {
                     queries: DataFrame, k: Int, rerankFactor: Int = 8,
                     idCol: String = "vec_id", embCol: String = "embedding",
                     qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types._
-    val spark = codes.sparkSession
-    import spark.implicits._
-    // the query table is collected ONCE and that array is the single source
-    // of truth: closure LUTs index it, and the (__qi, qid, qvec) mapping
-    // joined back after aggregation is rebuilt FROM it — a nondeterministic
-    // or re-evaluated query source can't mis-pair LUTs with vectors
-    val qSelected = queries.select(col(qidCol), col(qvecCol))
-    val qRows = qSelected.collect()
-    val n = qRows.length
-    require(n > 0, "pqSearchBatch needs a non-empty query table")
-    qRows.zipWithIndex.foreach { case (r, i) =>
-      require(!r.isNullAt(1),
-        s"pqSearchBatch: query '${r.get(0)}' (row $i) has a null $qvecCol — " +
-          "filter null query embeddings before searching") }
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    val qIndexed = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        qRows.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(i, r.get(0), r.get(1))
-        }.toSeq, 1),
-      StructType(StructField("__qi", IntegerType, nullable = false) +:
-        qSelected.schema.fields))
-    val luts = qVecs.map(buildAdcLut(cb, _))
-    val qnorms = qVecs.map(vecNorm)
-    // the query norms ride in the SAME closure as the LUTs (indexed by __qi)
-    // — building a Catalyst n-element array literal per code row would cost
-    // O(n²) work across the n-way explode as the query batch grows
-    val adcUdf = udf { (code: Array[Byte], norm: Double, qi: Int) =>
+    // the query table is the single source of truth: closure LUTs index
+    // it, and the (__qi, qid, qvec) mapping joined back after aggregation
+    // is the same collected rows
+    val qt = VectorSearch.queryTable(queries, qidCol, qvecCol, "pqSearchBatch")
+    val scored = codes
+      .filter(col("code").isNotNull && col("norm").isNotNull) // null embeddings never rank
+      .withColumn("__qi", explode(lit(qt.rows.indices.toArray)))
+      .select(col("__qi"), col(idCol).as("__id"), adcCosine(cb, qt.vecs).as("__score"))
+    val candidates = VectorSearch.topKPerQuery(scored, k * rerankFactor, idCol,
+        codes.schema(idCol).dataType, "pqSearchBatch")
+      .select(col("__qi"), col(idCol))
+    rerankBatch(corpus, candidates, qt, k, idCol, embCol, qvecCol)
+  }
+
+  /** Approximate cosine of each (code, norm) row against query `__qi` for
+    * the batch ADC forms. Per-query LUTs AND norms ride in the kernel's
+    * closure, indexed by `__qi` — building a Catalyst n-element array
+    * literal per code row would cost O(n²) work across an n-way explode as
+    * the query batch grows. Zero norms score -2, below any true cosine. */
+  private def adcCosine(cb: PqCodebook, vecs: Array[Array[Float]]): Column = {
+    val luts = vecs.map(buildAdcLut(cb, _))
+    val qnorms = vecs.map(vecNorm)
+    udf { (code: Array[Byte], norm: Double, qi: Int) =>
       val qn = qnorms(qi)
       if (norm == 0.0 || qn == 0.0) -2.0
       else adcDot(luts(qi), code) / (norm * qn)
-    }
-    val acos = adcUdf(col("code"), col("norm"), col("__qi"))
-    val scored = codes
-      .filter(col("code").isNotNull && col("norm").isNotNull) // null embeddings never rank
-      .withColumn("__qi", explode(lit((0 until n).toArray)))
-      .select(col("__qi"), col(idCol).as("__id"), acos.as("__acos"))
-    val limit = k * rerankFactor
-    val idType = codes.schema(idCol).dataType
-    val aggregated = idType match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        val topk = udaf(new graft.functions.TopKAggregator[Long](
-          limit, implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Double)]]]))
-        scored.groupBy(col("__qi"))
-          .agg(topk(col("__id").cast("long"), col("__acos")).as("__topk"))
-      case StringType =>
-        val topk = udaf(new graft.functions.TopKAggregator[String](
-          limit, implicitly[org.apache.spark.sql.Encoder[Seq[(String, Double)]]])(
-          graft.functions.TopKAggregator.utf8Ordering, implicitly))
-        scored.groupBy(col("__qi"))
-          .agg(topk(col("__id"), col("__acos")).as("__topk"))
-      case other => throw new IllegalArgumentException(
-        s"pqSearchBatch id column '$idCol' must be integral or string, got " +
-          s"${other.catalogString}")
-    }
-    val candidates = aggregated
-      .select(col("__qi"), explode(col("__topk")).as("__hit"))
-      .select(col("__qi"), col("__hit._1").cast(idType).as(idCol))
+    }.apply(col("code"), col("norm"), col("__qi"))
+  }
+
+  /** Exact re-rank of the batch ADC forms: each query's (`__qi`, idCol)
+    * candidates joined to the raw `corpus` rows, scored by exact cosine,
+    * top-`k` per query (score desc, id asc). Output (qid, idCol, rank,
+    * score). */
+  private def rerankBatch(corpus: DataFrame, candidates: DataFrame, qt: VectorSearch.QueryTable,
+                          k: Int, idCol: String, embCol: String, qvecCol: String): DataFrame = {
     val rerankW = Window.partitionBy(col("__qi"))
       .orderBy(col("score").desc, col(idCol).asc)
     corpus.join(broadcast(candidates), idCol)
-      .join(broadcast(qIndexed), "__qi")
+      .join(broadcast(qt.indexed), "__qi")
       .withColumn("score", (cosineSimilarity(col(embCol), col(qvecCol)) + 1.0) / 2.0)
       .withColumn("rank", row_number().over(rerankW))
       .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("rank"), col("score"))
+      .select(col(qt.qidCol), col(idCol), col("rank"), col("score"))
   }
 
   // -------------------------------------------------------- int8 quantization
@@ -1217,27 +1169,10 @@ object Similarity {
                              idCol: String = "vec_id", embCol: String = "embedding",
                              qidCol: String = "qid", qvecCol: String = "qvec",
                              payloadCols: Seq[String] = Nil): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types._
     val spark = codesAssigned.sparkSession
     import spark.implicits._
-    val qSelected = queries.select(col(qidCol), col(qvecCol))
-    val qRows = qSelected.collect()
-    require(qRows.nonEmpty, "ivfPqSearchPrunedBatch needs a non-empty query table")
-    qRows.zipWithIndex.foreach { case (r, i) =>
-      require(!r.isNullAt(1),
-        s"ivfPqSearchPrunedBatch: query '${r.get(0)}' (row $i) has a null $qvecCol — " +
-          "filter null query embeddings before searching") }
-    val qVecs = qRows.map(_.getSeq[Float](1).toArray)
-    val qIndexed = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        qRows.zipWithIndex.map { case (r, i) =>
-          org.apache.spark.sql.Row(i, r.get(0), r.get(1))
-        }.toSeq, 1),
-      StructType(StructField("__qi", IntegerType, nullable = false) +:
-        qSelected.schema.fields))
-    val luts = qVecs.map(buildAdcLut(cb, _))
-    val qnorms = qVecs.map(vecNorm)
+    val qt = VectorSearch.queryTable(queries, qidCol, qvecCol, "ivfPqSearchPrunedBatch")
     val cellType = codesAssigned.schema("centroid_id").dataType
     // the candidate-cell ride-along (below) carries cells as LONG inside
     // the top-k pair — a non-integral centroid id would cast to null and
@@ -1246,29 +1181,12 @@ object Similarity {
     require(Seq(ByteType, ShortType, IntegerType, LongType).contains(cellType),
       s"ivfPqSearchPrunedBatch centroid_id must be integral, got " +
         s"${cellType.catalogString} — the engine's catalogs assign long cells")
-    // per-query probe sets ranked on the driver, as the serial path ranks
-    val cents = graft.IndexMeta.centroids(centroids)
-    val probes = qVecs.map(nearestCells(cents, _, nprobe))
-    val pairs = spark.createDataFrame(
-        probes.zipWithIndex.flatMap { case (cs, i) =>
-          cs.map(c => org.apache.spark.sql.Row(c, i))
-        }.toSeq.asJava,
-        StructType(Seq(StructField("centroid_id", LongType, nullable = false),
-          StructField("__qi", IntegerType, nullable = false))))
-      .select(col("centroid_id").cast(cellType).as("centroid_id"), col("__qi"))
-    val cells = cellValues(probes.flatten.distinct.sorted.toSeq, cellType)
-    val adcUdf = udf { (code: Array[Byte], norm: Double, qi: Int) =>
-      val qn = qnorms(qi)
-      if (norm == 0.0 || qn == 0.0) -2.0
-      else adcDot(luts(qi), code) / (norm * qn)
-    }
-    val scored = filterToCells(codesAssigned, cells,
-        pairs.select(col("centroid_id")).distinct())
+    val (pairs, prunedCodes) = probeCells(codesAssigned, centroids, qt, nprobe)
+    val scored = prunedCodes
       .filter(col("code").isNotNull && col("norm").isNotNull)
-      .join(broadcast(pairs), "centroid_id")
+      .join(broadcast(pairs.select(col("centroid_id"), col("__qi"))), "centroid_id")
       .select(col("__qi"), col(idCol).as("__id"),
-        col("centroid_id").cast("long").as("__cell"),
-        adcUdf(col("code"), col("norm"), col("__qi")).as("__acos"))
+        col("centroid_id").cast("long").as("__cell"), adcCosine(cb, qt.vecs).as("__acos"))
     val limit = k * rerankFactor
     val idType = codesAssigned.schema(idCol).dataType
     // the aggregated value is the (id, cell) PAIR — the cell rides the
@@ -1309,8 +1227,7 @@ object Similarity {
         col("__hit._1._2").as("__cell"))
       .collect()
     val candidates = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        candRows.toIndexedSeq.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1))), 1),
+      candRows.toSeq.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1))).asJava,
       StructType(Seq(StructField("__qi", IntegerType, nullable = false),
         StructField(idCol, idType))))
     // the exact re-rank reads only the CANDIDATES' cells (an id lives in
@@ -1319,25 +1236,11 @@ object Similarity {
     val candCellLongs = candRows.map(_.getLong(2)).distinct.toIndexedSeq
     val candCells = cellValues(candCellLongs, cellType)
     val prunedRaw = filterToCells(corpusAssigned, candCells,
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          candCellLongs.map(l => org.apache.spark.sql.Row(l)), 1),
-        StructType(Seq(StructField("centroid_id", LongType))))
+      spark.createDataFrame(candCellLongs.map(l => org.apache.spark.sql.Row(l)).asJava,
+          StructType(Seq(StructField("centroid_id", LongType))))
         .select(col("centroid_id").cast(cellType)))
-    val rerankW = Window.partitionBy(col("__qi"))
-      .orderBy(col("score").desc, col(idCol).asc)
-    val out = prunedRaw.join(broadcast(candidates), idCol)
-      .join(broadcast(qIndexed), "__qi")
-      .withColumn("score", (cosineSimilarity(col(embCol), col(qvecCol)) + 1.0) / 2.0)
-      .withColumn("rank", row_number().over(rerankW))
-      .filter(col("rank") <= k)
-      .select(col(qidCol), col(idCol), col("rank"), col("score"))
-    if (payloadCols.isEmpty) out
-    else {
-      val payload = prunedRaw.select((idCol +: payloadCols).map(col): _*)
-      payload.join(broadcast(out), idCol)
-        .select((Seq(qidCol, idCol, "rank", "score") ++ payloadCols).map(col): _*)
-    }
+    withPayload(rerankBatch(prunedRaw, candidates, qt, k, idCol, embCol, qvecCol),
+      prunedRaw, idCol, qidCol, payloadCols)
   }
 
   /** Deterministic seeded codebook for corpora whose ids are NOT dense

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.functions.TopKAggregator
 import graft.functions.VectorFunctions._
 
 /** Vector KNN search (SURVEY.md §2.6 V2-V4, §2.3 J5/J6).
@@ -57,48 +59,81 @@ object VectorSearch {
   /** Batch KNN: every row of `queries` (qidCol, qvecCol) against the corpus.
     * The query table is broadcast and the corpus scanned once; per-query
     * top-k runs through the bounded-heap [[graft.functions.TopKAggregator]]
-    * under `groupBy(qid)`, so each partition reduces its scored rows to at
-    * most k per query BEFORE the exchange — the shuffle carries
+    * under a per-query `groupBy`, so each partition reduces its scored rows
+    * to at most k per query BEFORE the exchange — the shuffle carries
     * O(k × |queries| × partitions) rows, never the corpus × queries cross
     * product (the reference's `$vectorSearch` likewise never materializes
     * more than k candidates per query, vector_search.py:61-95). Output:
     * (qidCol, idCol, rank, score) — re-join on idCol for payload columns.
-    *
-    * Id-generic: integral ids aggregate as Long and are cast back to the
-    * column's own type; string ids (the engine's md5 chunk_id, the
-    * reference's `_id`) aggregate as String with UTF-8 binary tiebreak (the
-    * ordering Spark and DuckDB apply to strings). Any other id type fails
-    * fast at plan time rather than as an encoder NPE mid-job.
-    */
+    * Ids are integral or string ([[topKPerQuery]]); the query table is
+    * collected once ([[queryTable]]), and a null query vector fails. */
   def knnBatch(corpus: DataFrame, queries: DataFrame, k: Int,
                embCol: String = "embedding", idCol: String = "id",
                qidCol: String = "qid", qvecCol: String = "qvec"): DataFrame = {
-    import org.apache.spark.sql.types._
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val idType = corpus.schema(idCol).dataType
-    val scored = corpus.crossJoin(broadcast(queries))
-      .select(col(qidCol), col(idCol).as("__id"),
+    val qt = queryTable(queries, qidCol, qvecCol, "knnBatch")
+    val scored = corpus.crossJoin(broadcast(qt.indexed.select(col("__qi"), col(qvecCol))))
+      .select(col("__qi"), col(idCol).as("__id"),
         score(col(embCol), col(qvecCol)).as("__score"))
-    val aggregated = idType match {
+    qt.ranked(topKPerQuery(scored, k, idCol, corpus.schema(idCol).dataType, "knnBatch"),
+      idCol)
+  }
+
+  /** A batch search's query table, collected ONCE (broadcast-scale by
+    * contract): rows and vectors on the driver, and `indexed` = (`__qi`,
+    * qid, qvec) as a local relation. `__qi` is a row's position in `rows`,
+    * so whatever is indexed by it (probe sets, ADC tables) stays paired
+    * with its vector even when the query source is nondeterministic. */
+  private[operators] final case class QueryTable(rows: Array[Row], vecs: Array[Array[Float]],
+                                                 indexed: DataFrame, qidCol: String) {
+    /** (qid, idCol, rank, score) from [[topKPerQuery]]'s output. */
+    def ranked(topk: DataFrame, idCol: String): DataFrame =
+      topk.join(broadcast(indexed.select(col("__qi"), col(qidCol))), "__qi")
+        .select(col(qidCol), col(idCol), col("rank"), col("score"))
+  }
+
+  /** Collect `queries` (qidCol, qvecCol) into a [[QueryTable]]; an empty
+    * table or a null query vector fails loudly, naming the operator `op`. */
+  private[operators] def queryTable(queries: DataFrame, qidCol: String, qvecCol: String,
+                                    op: String): QueryTable = {
+    import scala.jdk.CollectionConverters._
+    val selected = queries.select(col(qidCol), col(qvecCol))
+    val rows = selected.collect()
+    require(rows.nonEmpty, s"$op needs a non-empty query table")
+    rows.zipWithIndex.foreach { case (r, i) =>
+      require(!r.isNullAt(1),
+        s"$op: query '${r.get(0)}' (row $i) has a null $qvecCol — " +
+          "filter null query embeddings before searching") }
+    val indexed = queries.sparkSession.createDataFrame(
+      rows.zipWithIndex.map { case (r, i) => Row(i, r.get(0), r.get(1)) }.toSeq.asJava,
+      StructType(StructField("__qi", IntegerType, nullable = false) +: selected.schema.fields))
+    QueryTable(rows, rows.map(_.getSeq[Float](1).toArray), indexed, qidCol)
+  }
+
+  /** Per-query top-`k` of `scored` (`__qi`, `__id`, `__score`) through the
+    * bounded-heap [[graft.functions.TopKAggregator]] under `groupBy(__qi)`.
+    * Integral ids rank as long and come back as `idType`; string ids (md5
+    * chunk ids, the reference's `_id`) tie-break in UTF-8 binary order, as
+    * Spark and DuckDB sort strings; any other id type fails at plan time
+    * rather than as an encoder NPE mid-job. Output: (`__qi`, idCol, rank
+    * from 1, score). */
+  private[operators] def topKPerQuery(scored: DataFrame, k: Int, idCol: String,
+                                      idType: DataType, op: String): DataFrame = {
+    val spark = scored.sparkSession
+    import spark.implicits._
+    val topk = idType match {
       case ByteType | ShortType | IntegerType | LongType =>
-        val topk = udaf(new graft.functions.TopKAggregator[Long](
-          k, implicitly[org.apache.spark.sql.Encoder[Seq[(Long, Double)]]]))
-        scored.groupBy(col(qidCol))
-          .agg(topk(col("__id").cast("long"), col("__score")).as("__topk"))
+        udaf(new TopKAggregator[Long](k, implicitly[Encoder[Seq[(Long, Double)]]]))
+          .apply(col("__id").cast("long"), col("__score"))
       case StringType =>
-        val topk = udaf(new graft.functions.TopKAggregator[String](
-          k, implicitly[org.apache.spark.sql.Encoder[Seq[(String, Double)]]])(
-          graft.functions.TopKAggregator.utf8Ordering, implicitly))
-        scored.groupBy(col(qidCol))
-          .agg(topk(col("__id"), col("__score")).as("__topk"))
+        udaf(new TopKAggregator[String](k, implicitly[Encoder[Seq[(String, Double)]]])(
+          TopKAggregator.utf8Ordering, implicitly))
+          .apply(col("__id"), col("__score"))
       case other => throw new IllegalArgumentException(
-        s"knnBatch id column '$idCol' must be integral or string, got " +
-          s"${other.catalogString}")
+        s"$op id column '$idCol' must be integral or string, got ${other.catalogString}")
     }
-    aggregated
-      .select(col(qidCol), posexplode(col("__topk")).as(Seq("__pos", "__hit")))
-      .select(col(qidCol), col("__hit._1").cast(idType).as(idCol),
+    scored.groupBy(col("__qi")).agg(topk.as("__topk"))
+      .select(col("__qi"), posexplode(col("__topk")).as(Seq("__pos", "__hit")))
+      .select(col("__qi"), col("__hit._1").cast(idType).as(idCol),
         (col("__pos") + 1).cast("int").as("rank"), col("__hit._2").as("score"))
   }
 

@@ -236,7 +236,7 @@ object DedupQueries {
       Dedup.embeddingPairsCelledIncremental(batch,
           graft.IvfCatalog.assignedEmbeddings(s, dir, 16, 31L),
           graft.operators.Similarity.seededCentroids(emb, 16, 31L),
-          minCosine = 0.45, nprobe = 2)
+          minCosine = 0.45, batchRows = 20L, nprobe = 2)
         .select($"left_id", $"right_id", round($"cosine", 6).as("cosine"))
     }),
 

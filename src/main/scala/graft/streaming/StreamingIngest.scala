@@ -12,8 +12,8 @@ import graft.pipelines.Pipelines
   * N28 as a RUNNING loop, not separate pieces): each micro-batch of arriving
   * vectors is (1) flagged for near-duplicates against the materialized
   * index via the partition-pruned incremental celled kernel
-  * ([[Dedup.embeddingPairsCelledIncrementalBatched]]: store rows scored in
-  * place against the broadcast batch), then (2) its SURVIVORS are
+  * ([[Dedup.embeddingPairsCelledIncremental]]: a micro-batch's store rows
+  * are scored in place against the broadcast batch), then (2) its SURVIVORS are
   * appended into the index's cell partitioning ([[IvfCatalog.appendBatch]])
   * so the next micro-batch sees them. The store is the stream's state —
   * durable, queryable, shared with every batch consumer — which is why this
@@ -66,9 +66,9 @@ object StreamingIngest {
     val cents = IvfCatalog.centroidsFor(spark, dir, nlist, step, trained)
     val b = batch.select(col(idCol).cast("long").as(idCol), col(embCol))
     // r16: the batched kernel scores store rows in place (no per-batch
-    // store shuffle); the Auto dispatch keeps the distributed kernel for a
+    // store shuffle); the kernel keeps its distributed form for a
     // bulk-sized batch handed to this entry point directly
-    val pairs = Dedup.embeddingPairsCelledIncrementalAuto(b, store, cents, minCosine,
+    val pairs = Dedup.embeddingPairsCelledIncremental(b, store, cents, minCosine,
       batchRows = b.count(), nprobe = nprobe, idCol = idCol, embCol = embCol)
     // which pair sides are batch ids (vs stored ids): the batch-id set is
     // micro-batch-sized by construction, so these are broadcast joins
@@ -171,7 +171,7 @@ object StreamingIngest {
     * is materialized where curation can read it: each surviving chunk is
     * flagged against the store (and its batch-mates) through the
     * partition-pruned celled kernel
-    * ([[Dedup.embeddingPairsCelledIncrementalByIdBatched]]), and near-duplicates
+    * ([[Dedup.embeddingPairsCelledIncremental]]), and near-duplicates
     * land with `near_dup_of` = the lexically-smallest counterpart chunk id
     * (null otherwise). Flag cost follows the incremental contract — batch ×
     * its probed cells — and `flagNearDups = false` skips it entirely.
@@ -235,11 +235,11 @@ object StreamingIngest {
           // (explode inside nearDupFlags), so nothing needs persisting —
           // which also closes the r15 unbounded persistTracked leak on
           // the long-running ingest stream.
-          val pairs = Dedup.embeddingPairsCelledIncrementalByIdAuto(
+          val pairs = Dedup.embeddingPairsCelledIncremental(
             survivors.select(col("chunk_id"), col("embedding")),
             spark.table(storeName),
             IvfCatalog.chunkCentroidsStored(spark, dir, nlist, trained, gen = g),
-            flagMinCosine, batchRows = nAppended, nprobe = flagNprobe)
+            flagMinCosine, batchRows = nAppended, nprobe = flagNprobe, idCol = "chunk_id")
           // per surviving chunk: the smallest counterpart as representative
           // (counterparts can be stored chunks or batch-mates)
           val flags = Dedup.nearDupFlags(pairs, survivors.select(col("chunk_id")))

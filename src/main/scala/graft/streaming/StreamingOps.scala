@@ -207,13 +207,8 @@ object StreamingOps {
     val bar = minCosine
     val celled = vecs.flatMap { v =>
       if (v.embedding == null) Iterator.empty
-      else {
-        val a = v.embedding.toArray
-        centroids.map { case (cid, cv) => (cid, cosineArrays(a, cv)) }
-          .sortBy { case (cid, cos) => (-cos, cid) } // same tie-break as batch
-          .take(probes).iterator
-          .map { case (cid, _) => (cid, v.vec_id, v.embedding, v.ts) }
-      }
+      else graft.operators.Dedup.topCells(centroids, v.embedding.toArray, probes).iterator
+        .map(cid => (cid, v.vec_id, v.embedding, v.ts))
     }.toDF("cell", "vec_id", "embedding", "ts")
       .withWatermark("ts", watermarkDelay)
       .as[(Long, Long, Seq[Float], Timestamp)]

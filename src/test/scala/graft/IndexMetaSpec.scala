@@ -69,6 +69,27 @@ class IndexMetaSpec extends AnyFunSuite {
     assert(jobs(IvfPqCatalog.chunkCodebookStored(spark, dir, 48, 32)) === 0)
   }
 
+  test("warm batch probes of 5 queries run pinned job counts") {
+    // the query frame reads the chunk store, so its collect is one job
+    def queries(): DataFrame = IvfCatalog.assignedChunks(spark, dir, 16)
+      .orderBy(col("chunk_id").asc).limit(5)
+      .select(col("chunk_id").as("qid"), col("embedding").as("qvec"))
+    def ivf(): Unit = Similarity.ivfSearchPrunedBatch(IvfCatalog.assignedChunks(spark, dir, 16),
+      IvfCatalog.chunkCentroidsStored(spark, dir, 16), queries(), k = 10, nprobe = 4,
+      idCol = "chunk_id").collect()
+    def ivfPq(): Unit = Similarity.ivfPqSearchPrunedBatch(
+      IvfPqCatalog.encodedChunks(spark, dir, 16, 48, 32), IvfCatalog.assignedChunks(spark, dir, 16),
+      IvfCatalog.chunkCentroidsStored(spark, dir, 16),
+      IvfPqCatalog.chunkCodebookStored(spark, dir, 48, 32), queries(), k = 10, nprobe = 4,
+      idCol = "chunk_id").collect()
+    ivf(); ivfPq()
+    // IVF: the query collect, one job per broadcast (a local relation's
+    // too), the top-k map stage and the result; ADC adds the candidate
+    // collect and the rerank's stages
+    assert(jobs(ivf()) <= 5)
+    assert(jobs(ivfPq()) <= 8)
+  }
+
   test("driver probe ranking equals Spark's on exact cosine ties, zero and NaN vectors") {
     val a = Seq(1f, 0f, 0f, 0f)
     val b = Seq(0.6f, 0.8f, 0f, 0f)

@@ -101,7 +101,7 @@ class IvfCatalogSpec extends AnyFunSuite {
     def flag(batch: org.apache.spark.sql.DataFrame) =
       Dedup.embeddingPairsCelledIncremental(batch,
           IvfCatalog.assignedEmbeddings(spark, tdir, 8, 31L), cents,
-          minCosine = 0.999, nprobe = 2)
+          minCosine = 0.999, batchRows = batch.count(), nprobe = 2)
         .select($"left_id", $"right_id").as[(Long, Long)].collect().toSet
     assert(flag(batch1) === Set((0L, 1000L), (1L, 1001L), (2L, 1002L),
       (3L, 1003L), (4L, 1004L)))

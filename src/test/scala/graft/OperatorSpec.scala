@@ -397,7 +397,7 @@ class OperatorSpec extends AnyFunSuite {
     import spark.implicits._
     // ivfAssign keeps null-embedding rows (every vec_id gets an rn=1 cell),
     // so a stored index can contain them; 2 cells × nprobe=2 guarantees the
-    // null row's cell IS probed — the kernel must skip it, not NPE
+    // null row's cell IS probed — neither route may NPE on it
     val cents = Similarity.seededCentroids(emb, 2, 31L)
     val withNull = emb.select($"vec_id", $"embedding").unionByName(
       Seq(99999L).toDF("vec_id")
@@ -405,86 +405,102 @@ class OperatorSpec extends AnyFunSuite {
     val store = Similarity.ivfAssign(withNull, cents)
     val batch = emb.filter($"vec_id" < 20)
       .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
-    val pairs = Dedup.embeddingPairsCelledIncremental(batch, store, cents,
-      minCosine = 0.45, nprobe = 2).collect()
-    assert(pairs.nonEmpty)
-    assert(!pairs.exists(r => r.getLong(0) == 99999L || r.getLong(1) == 99999L))
+    for (batchRows <- Seq(20L, Dedup.BatchedFlagMaxRows + 1)) {
+      val pairs = Dedup.embeddingPairsCelledIncremental(batch, store, cents,
+        minCosine = 0.45, batchRows = batchRows, nprobe = 2).collect()
+      assert(pairs.nonEmpty)
+      assert(!pairs.exists(r => r.getLong(0) == 99999L || r.getLong(1) == 99999L))
+    }
   }
 
-  test("batched-probe incremental kernel is row-equal to the shuffle kernel (long ids)") {
+  // The celled incremental flag kernel on one id type, over both routes
+  // (`batchRows` 20 → the batched micro route, `BatchedFlagMaxRows + 1` →
+  // the distributed shuffle kernel), against a stored index with a planted
+  // null embedding (a supported shape). Each route's pairs come back as
+  // `(route, plain, twin)` with ids mapped onto the long id space, after the
+  // per-route checks: canonical left < right in the id type's own order, the
+  // null id never paired, the route's plan shape, and the empty batch's
+  // schema and zero count.
+  private def celledIncrementalRoutes(idType: String)
+      : Seq[(String, Set[(Long, Long, Double)], Set[(Long, Long, Double)])] = {
     import spark.implicits._
+    type Frame = org.apache.spark.sql.DataFrame
     val cents = Similarity.seededCentroids(emb, 16, 31L)
-    val store = Similarity.ivfAssign(emb.select($"vec_id", $"embedding"), cents)
-    val batch = emb.filter($"vec_id" < 20)
-      .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"left_id", $"right_id", round($"cosine", 9))
-        .as[(Long, Long, Double)].collect().toSet
-    val orig = rows(Dedup.embeddingPairsCelledIncremental(batch, store, cents,
-      minCosine = 0.45, nprobe = 2))
-    val batched = rows(Dedup.embeddingPairsCelledIncrementalBatched(batch, store, cents,
-      minCosine = 0.45, nprobe = 2))
-    assert(orig.nonEmpty)
-    assert(batched === orig)
-    // new×new coverage: a batch-mate pair (two re-tagged copies of the same
-    // original vector) must survive the driver-side loop identically
-    val twin = batch.unionByName(
-      emb.filter($"vec_id" < 5).select(($"vec_id" + 200000).as("vec_id"), $"embedding"))
-    val origT = rows(Dedup.embeddingPairsCelledIncremental(twin, store, cents,
-      minCosine = 0.45, nprobe = 2))
-    val batchedT = rows(Dedup.embeddingPairsCelledIncrementalBatched(twin, store, cents,
-      minCosine = 0.45, nprobe = 2))
-    assert(batchedT === origT)
-    assert(origT.exists { case (l, r, _) => l >= 100000L && r >= 200000L },
-      "fixture lost its planted new×new pair")
-    // empty batch: defined, empty, right schema
-    val none = Dedup.embeddingPairsCelledIncrementalBatched(
-      batch.filter($"vec_id" < 0), store, cents, minCosine = 0.45, nprobe = 2)
-    assert(none.columns.toSeq === Seq("left_id", "right_id", "cosine"))
-    assert(none.count() === 0L)
-  }
-
-  test("batched-probe incremental kernel parity (string ids) + null-embedding store") {
-    import spark.implicits._
-    val cents = Similarity.seededCentroids(emb, 16, 31L)
-    // string-keyed store with a planted null embedding (supported shape)
-    val storeS = Similarity.ivfAssign(
+    val storeL = Similarity.ivfAssign(
       emb.select($"vec_id", $"embedding").unionByName(
         Seq(99999L).toDF("vec_id")
           .withColumn("embedding", lit(null).cast("array<float>"))), cents)
-      .withColumn("chunk_id", format_string("s%05d", $"vec_id"))
-      .drop("vec_id")
-    val batchS = emb.filter($"vec_id" < 20)
-      .select(format_string("b%05d", $"vec_id").as("chunk_id"), $"embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select($"left_id", $"right_id", round($"cosine", 9))
-        .as[(String, String, Double)].collect().toSet
-    val orig = rows(Dedup.embeddingPairsCelledIncrementalById(batchS, storeS, cents,
-      minCosine = 0.45, nprobe = 2))
-    val batched = rows(Dedup.embeddingPairsCelledIncrementalByIdBatched(batchS, storeS, cents,
-      minCosine = 0.45, nprobe = 2))
-    assert(orig.nonEmpty)
-    assert(batched === orig)
-    assert(!batched.exists { case (l, r, _) => l == "s99999" || r == "s99999" })
-    // the store-side pass moved no store rows: the plan has no shuffle
-    // upstream of the store scan (the original kernel's repartition is gone)
-    val plan = Dedup.embeddingPairsCelledIncrementalByIdBatched(batchS, storeS, cents,
-      minCosine = 0.45, nprobe = 2).queryExecution.executedPlan.toString
-    assert(!plan.contains("REPARTITION_BY_COL"),
-      "batched kernel must not repartition store rows by cell")
+    val batchL = emb.filter($"vec_id" < 20)
+      .select(($"vec_id" + 100000).as("vec_id"), $"embedding")
+    // new×new coverage: two re-tagged copies of the same original vector
+    val twinL = batchL.unionByName(
+      emb.filter($"vec_id" < 5).select(($"vec_id" + 200000).as("vec_id"), $"embedding"))
+    // string ids keep the long id after a one-letter prefix ("s" stored,
+    // "b" batch), so their pairs map back onto the long id space
+    def asStrings(df: Frame, prefix: String): Frame =
+      df.withColumn("chunk_id", concat(lit(prefix), $"vec_id".cast("string")))
+        .drop("vec_id")
+    val (idCol, store, retype) = idType match {
+      case "long" => ("vec_id", storeL, (b: Frame) => b)
+      case "string" => ("chunk_id", asStrings(storeL, "s"), (b: Frame) => asStrings(b, "b"))
+    }
+    def idNum(s: String): Long = if (s.head.isDigit) s.toLong else s.tail.toLong
 
-    // the Auto dispatch: a micro-batch takes the batched (shuffle-free)
-    // kernel, a bulk batch past BatchedFlagMaxRows keeps the DISTRIBUTED
-    // kernel — the batched form's driver collect and per-cell new×new loop
-    // must never see a million-chunk re-crawl
-    val autoMicro = Dedup.embeddingPairsCelledIncrementalByIdAuto(batchS, storeS, cents,
-      minCosine = 0.45, batchRows = 20L)
-    assert(!autoMicro.queryExecution.executedPlan.toString.contains("REPARTITION_BY_COL"))
-    val autoBulk = Dedup.embeddingPairsCelledIncrementalByIdAuto(batchS, storeS, cents,
-      minCosine = 0.45, batchRows = Dedup.BatchedFlagMaxRows + 1)
-    assert(autoBulk.queryExecution.executedPlan.toString.contains("REPARTITION_BY_COL"),
-      "a bulk-sized batch must route to the distributed kernel")
-    assert(rows(autoBulk) === rows(autoMicro), "both routes must agree row-for-row")
+    for (batchRows <- Seq(20L, Dedup.BatchedFlagMaxRows + 1)) yield {
+      def pairs(batch: Frame): Frame = Dedup.embeddingPairsCelledIncremental(
+        retype(batch), store, cents, minCosine = 0.45, batchRows = batchRows,
+        nprobe = 2, idCol = idCol)
+      val cell = s"$idType ids, batchRows = $batchRows"
+      def rows(batch: Frame): Set[(Long, Long, Double)] = {
+        val got = pairs(batch)
+          .select($"left_id".cast("string"), $"right_id".cast("string"), round($"cosine", 9))
+          .as[(String, String, Double)].collect()
+        // canonical order is the id type's own: numeric or UTF-8 binary
+        assert(got.forall { case (l, r, _) =>
+          if (idType == "long") l.toLong < r.toLong else l < r }, s"$cell: left < right")
+        got.map { case (l, r, c) => (idNum(l), idNum(r), c) }
+          .map { case (a, b, c) => (math.min(a, b), math.max(a, b), c) }.toSet
+      }
+      val (plain, twin) = (rows(batchL), rows(twinL))
+      assert(!plain.exists { case (l, r, _) => l == 99999L || r == 99999L }, cell)
+      // a bulk batch keeps the distributed kernel (its driver collect and
+      // per-cell new×new loop must never see a million-chunk re-crawl); a
+      // micro-batch scores store rows in place by a broadcast join, moving
+      // none by cell
+      val plan = pairs(batchL).queryExecution.executedPlan.toString
+      val micro = batchRows <= Dedup.BatchedFlagMaxRows
+      assert(plan.contains("REPARTITION_BY_COL") === !micro, s"$cell: route")
+      assert(!micro || plan.contains("BroadcastHashJoin"), s"$cell: in-place scoring")
+      // empty batch: defined, empty, right schema
+      val none = pairs(batchL.filter($"vec_id" < 0))
+      assert(none.columns.toSeq === Seq("left_id", "right_id", "cosine"), cell)
+      assert(none.count() === 0L, cell)
+      (cell, plain, twin)
+    }
+  }
+
+  private def assertRoutesAgree(
+      results: Seq[(String, Set[(Long, Long, Double)], Set[(Long, Long, Double)])],
+      plain0: Set[(Long, Long, Double)], twin0: Set[(Long, Long, Double)], base: String): Unit =
+    results.foreach { case (cell, plain, twin) =>
+      assert(plain === plain0, s"$cell differs from $base")
+      assert(twin === twin0, s"$cell differs from $base (new×new batch)")
+    }
+
+  test("batched-probe incremental kernel is row-equal to the shuffle kernel (long ids)") {
+    val results = celledIncrementalRoutes("long")
+    val (base, plain0, twin0) = results.head
+    assert(plain0.nonEmpty)
+    assert(twin0.exists { case (l, r, _) => l >= 100000L && r >= 200000L },
+      "fixture lost its planted new×new pair")
+    assertRoutesAgree(results, plain0, twin0, base)
+  }
+
+  test("batched-probe incremental kernel parity (string ids) + null-embedding store") {
+    // string ids give the same pairs on both routes as long ids do
+    val (base, plain0, twin0) = celledIncrementalRoutes("long").head
+    assert(plain0.nonEmpty)
+    assertRoutesAgree(celledIncrementalRoutes("string"), plain0, twin0, base)
   }
 
   test("trained k-means centroids/codebook swap in with no plan change; recall >= seeded") {

@@ -1269,6 +1269,9 @@ class StreamingSpec extends AnyFunSuite {
     Reindex.dropChunkGeneration(spark, tdir, nlA) // retire the old generation
     assert(!spark.catalog.tableExists(IvfCatalog.chunkStoreName(tdir, nlA)))
     check(nlB, "new generation after retiring the old")
+    // retire the new generation too: its `__gen` tables and pointer would
+    // otherwise outlive this test in the shared catalog
+    Reindex.dropChunkGeneration(spark, tdir, nlB)
     toDrop.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
