@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.Dataset
 
 /** Registry of the cached intermediates graft operators create (MinHash /
-  * SimHash / SSJoin shingle tables, BM25 doc lengths). Each persist() inside
+  * SimHash / SSJoin shingle tables). Each persist() inside
   * an operator is tracked here weakly; `release()` unpersists exactly those
   * plans — unlike `spark.sqlContext.clearCache()`, it never touches caches
   * the CALLER created. Long-lived sessions embedding this library should
@@ -38,7 +38,8 @@ object Caches {
   }
 
   /** Unpersist every live graft-created cache (non-blocking) and empty the
-    * [[IndexMeta]] memo of decoded index metadata. */
+    * [[IndexMeta]] memo of decoded index metadata, freeing the blocks of
+    * the BM25 term indexes it holds. */
   def release(): Unit = synchronized {
     live.foreach(d => d.unpersist(false))
     live.clear()

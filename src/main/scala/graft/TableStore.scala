@@ -20,12 +20,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * probe still lists only the partitions it scans.
   *
   * Index metadata (centroid tables, PQ codebooks) read through the store is
-  * decoded into driver arrays once per listed file set ([[IndexMeta]]):
-  * the just-refreshed relation's listing is part of the memo key, so a
-  * write that changes the files is re-read, and [[Caches.release]] empties
-  * the memo.
+  * decoded into driver arrays once per listed file set ([[IndexMeta]]), and
+  * BM25 over a stored table scores from a term index built the same way
+  * ([[graft.operators.TextSearch.bm25]]): the just-refreshed relation's
+  * listing is part of the memo key, so a write that changes the files is
+  * re-read, and [[Caches.release]] empties the memo. The term index is a
+  * persisted RDD, not a cached plan, so the refresh cannot empty it.
   */
 object TableStore {
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.TableStore")
 
   def tableName(kind: String, dir: String): String =
     s"graft_${kind}_" + dir.replaceAll("[^a-zA-Z0-9]", "_").toLowerCase(java.util.Locale.ROOT)
@@ -345,7 +349,9 @@ object TableStore {
           try fs.exists(hb) && fs.getFileStatus(hb).getModificationTime >= horizon
           catch { case _: java.io.FileNotFoundException => false }
         }
-        if (age < horizon && !recoveryCopy && !hbYoung) {
+        // `<=`: at olderThanMs = 0 an entry written in the sweep's own
+        // millisecond is aged too
+        if (age <= horizon && !recoveryCopy && !hbYoung) {
           val mf = new org.apache.hadoop.fs.Path(st.getPath, Compaction.ManifestFile)
           // Three manifest states, three fates. UNPARSEABLE (None) means
           // the atomic publish never landed ⇒ no mutation ran ⇒ the staging
@@ -373,7 +379,9 @@ object TableStore {
                 Compaction.resumeCommit(spark, st.getPath)
               }
               removed += n
-            } catch { case NonFatal(_) => () }
+            } catch {
+              case NonFatal(e) => log.warn(s"sweepOrphans: resuming the commit of $n failed", e)
+            }
           } else if (n.startsWith("__graft_lease_")) {
             // an aged lease file is reclaimed through the SAME hardened
             // break the waiter path uses (rename-aside + mtime re-verify),
@@ -386,7 +394,9 @@ object TableStore {
             try {
               if (MaintenanceLease.breakStale(fs, st.getPath, olderThanMs))
                 removed += n
-            } catch { case NonFatal(_) => () }
+            } catch {
+              case NonFatal(e) => log.warn(s"sweepOrphans: breaking the stale lease $n failed", e)
+            }
           } else {
             // a staging table may still be registered under a persistent
             // metastore — drop the catalog entry with its files

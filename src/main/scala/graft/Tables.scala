@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders for the shared fixture directory (TESTDATA.md).
   *
@@ -61,8 +64,37 @@ object Tables {
     * an exchange for nothing. */
   private val SpreadTables = Set("documents")
 
+  /** The parquet confs that change an inferred schema, `nanosAsLong`
+    * first: [[events]] sets it on the session. */
+  private val InferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled", "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles")
+
+  /** path → (inference confs, file listing, inferred schema): one slot per
+    * path. */
+  private val schemas =
+    new ConcurrentHashMap[String, (Seq[Option[String]], Option[Seq[(String, Long, Long)]], StructType)]()
+
+  /** `spark.read.parquet(p)` with the schema inferred once per file set.
+    * Inference runs a Spark job of its own; a read with a known schema runs
+    * none, and the listing its file index makes is compared with the one
+    * the schema was inferred from ([[IndexMeta.listing]]), so a rewritten
+    * file is inferred again. */
+  private def parquet(spark: SparkSession, p: String): DataFrame = {
+    val confs = InferenceConfs.map(spark.conf.getOption)
+    Option(schemas.get(p)).filter(_._1 == confs)
+      .map(m => (m, spark.read.schema(m._3).parquet(p)))
+      .collect { case (m, df) if IndexMeta.listing(df) == m._2 => df }
+      .getOrElse {
+        val df = spark.read.parquet(p)
+        schemas.put(p, (confs, IndexMeta.listing(df), df.schema))
+        df
+      }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(path(dir, name))
+    val df = parquet(spark, path(dir, name))
     if (!SpreadTables.contains(name)) return df
     val bytes = GraftSession.dirBytes(path(dir, name))
     if (bytes >= SpreadMinBytes && bytes < SpreadMaxBytes)

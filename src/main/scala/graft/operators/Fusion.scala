@@ -3,6 +3,9 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, Descending,
+  InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import graft.functions.VectorFunctions._
@@ -20,12 +23,15 @@ import graft.functions.VectorFunctions._
   * - Confidence aggregation (source_attribution.py:175-205).
   *
   * Scale notes: branch top-ks are TakeOrderedAndProject (no global sort)
-  * and are collected; their ≤ 4·limit rows are merged on the driver and
-  * ordered as a local relation, so the hybrid merge has no exchange.
-  * Measured on the `serve` benchmark corpus (≈2.2k chunks, 4 cores), a warm
-  * `hybridSearch` ran 11 Spark jobs before (a shuffle to merge ≤ 40 rows,
-  * on top of a BM25 branch that analyzed the corpus twice) and runs 5 now;
-  * with the attribution join that follows it on the serve path, 18 → 12.
+  * and are collected; their ≤ 4·limit rows are merged, ordered and cut on
+  * the driver, so the hybrid merge has no exchange and no job. Measured on
+  * the `serve` benchmark corpus (≈2.2k chunks, 4 cores), a warm
+  * `hybridSearch` ran 11 Spark jobs when it shuffled to merge ≤ 40 rows on
+  * top of a BM25 branch that analyzed the corpus twice, and 5 with a
+  * one-pass BM25 and a Spark-ordered local merge. Over a stored table it
+  * runs 3 now: the vector top-k and the two jobs of a term-index BM25
+  * query; over any other frame, 4. With the attribution join that follows
+  * it on the serve path, 18 → 12 → 9.
   * Weighted fusion shuffles ≤ Σ strategy-limits rows. Everything
   * downstream of the corpus scan is small-data.
   */
@@ -38,10 +44,11 @@ object Fusion {
     * by id (max score per branch), blended 0.7/0.3. Returns (idCol,
     * vector_score, text_score, score) top-`limit`.
     *
-    * Both branches run when this is called and their lists are merged on
-    * the driver, so the result is a plan over a local relation of at most
-    * 4·`limit` rows. The text branch is [[TextSearch.search]] itself: a BM25
-    * query and a hybrid query share one compiled plan. */
+    * Both branches run when this is called and their lists are merged,
+    * ordered and cut on the driver, so the result is a local relation of at
+    * most `limit` rows and collecting it runs no job. The text branch is
+    * [[TextSearch.search]] itself: a BM25 query and a hybrid query share one
+    * compiled plan. */
   def hybridSearch(corpus: DataFrame, queryVector: Array[Float], queryText: String,
                    limit: Int, idCol: String = "doc_id", textCol: String = "text",
                    embCol: String = "embedding",
@@ -57,7 +64,7 @@ object Fusion {
     val txt = TextSearch.search(corpus, queryText, limit * 2, idCol, textCol).collect()
 
     // one entry per id with its best score from each branch, as the
-    // reference's $group does; Spark orders the ≤ 4·limit merged rows
+    // reference's $group does
     def score(r: Row): Option[Double] = if (r.isNullAt(1)) None else Some(r.getDouble(1))
     def best(a: Option[Double], b: Option[Double]) = (a, b) match {
       case (Some(x), Some(y)) => Some(math.max(x, y))
@@ -73,9 +80,16 @@ object Fusion {
     val schema = StructType(Seq(corpus.select(col(idCol)).schema.head,
       StructField("vector_score", DoubleType), StructField("text_score", DoubleType),
       StructField("score", DoubleType, nullable = false)))
-    corpus.sparkSession.createDataFrame(rows.asJava, schema)
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(limit)
+    // the ≤ 4·limit merged rows are ordered on the driver by Catalyst's own
+    // ordering, so NaN, ±0.0, null ids and every id type order exactly as a
+    // Spark sort on (score DESC, id ASC) would
+    val order = new InterpretedOrdering(Seq(
+      SortOrder(BoundReference(3, DoubleType, nullable = false), Descending),
+      SortOrder(BoundReference(0, schema.head.dataType, nullable = true), Ascending)))
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
+    val top = rows.map(r => (toCatalyst(r).asInstanceOf[InternalRow], r))
+      .sortBy(_._1)(order).take(limit).map(_._2)
+    corpus.sparkSession.createDataFrame(top.asJava, schema)
   }
 
   /** One strategy's contribution to fusion: name, weight, and its scored

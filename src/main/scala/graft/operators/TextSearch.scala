@@ -1,7 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.control.NonFatal
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+import graft.IndexMeta
 import graft.functions.TextFunctions
 
 /** Full-text relevance search (SURVEY.md §2.7 X1).
@@ -9,27 +18,35 @@ import graft.functions.TextFunctions
   * The reference delegates text search to MongoDB Atlas `$search` (Lucene
   * BM25 over `content`, lucene.standard analyzer —
   * /root/reference/src/feature_pipeline/vector_storage/index_manager.py:139-152,
-  * vector_search.py:143-159). Here BM25 is computed natively as a DataFrame
-  * program in one pass over the corpus: each document is analyzed once into
-  * its length and the frequency of every query term; one aggregate keyed on
-  * the doc id keeps a row per matching document and folds every other
-  * document into a single null-keyed row on the map side; one global
-  * aggregate over that small result gives N, avgdl and every df, and is
-  * joined back onto the matching rows for scoring. Both consumers read the
-  * same shuffle (Spark reuses the exchange), so the analyzer — the stemmed
-  * UDF included — runs exactly once per document.
+  * vector_search.py:143-159). Here BM25 is computed natively as DataFrame
+  * programs, in one of two forms with the same scores, bit for bit (one
+  * score expression serves both):
+  *  - Over a bare stored catalog table (what `ChunkCatalog.flatChunks`
+  *    returns) analyzed by [[standardTokens]] or [[stemmedTokens]], each
+  *    query scores a term index: the corpus analyzed once per stored file
+  *    set into each document's id, length and tokens, with N, avgdl and the
+  *    duplicated ids held on the driver. A query is two jobs with no
+  *    shuffle: a per-partition count of the query terms' df merged on the
+  *    driver, then one map-only scoring pass (a `search` ends it in
+  *    TakeOrderedAndProject).
+  *  - Any other frame (the registered `txt_*` rows over `Tables.documents`,
+  *    a caller-supplied analyzer) is scored in one pass; see `onePass`.
   *
   * Determinism: per-doc term-score sums go through exact decimal
   * accumulation at scale 12 so results are partition-order independent (and
   * DuckDB-comparable bit for bit).
   *
-  * Cache contract: none. `bm25`/`search` persist nothing and leave
-  * [[graft.Caches]] untouched. Measured on the `serve` benchmark corpus
-  * (≈2.2k chunks, 4 cores): the earlier form analyzed the corpus twice and
-  * persisted a doc-length table on every call, 11 Spark jobs for a warm
-  * `search`; this form runs 3 (TextSearchSpec holds it to at most 4).
-  * Caching corpus state across calls would not pay: `TableStore` refreshes
-  * a stored table on every read, which drops every cache built over it.
+  * Cache contract: the term index lives in the [[graft.IndexMeta]] memo,
+  * keyed on the table, its `createTime`, its file listing, the id and text
+  * columns, the analyzer and the session, so any write that changes the
+  * files rebuilds it on the next query (one job). Its rows are a
+  * persisted RDD, not a cached plan, so `TableStore`'s `refreshTable` on
+  * every store read cannot empty it. A replaced index frees its blocks, and
+  * so does [[graft.Caches.release]]. The one-pass form persists nothing.
+  * Measured on the `serve` benchmark corpus (≈2.2k chunks, 4 cores): a
+  * warm `search` ran 11 Spark jobs when it analyzed the corpus twice and
+  * persisted a doc-length table per call, 3 in one pass, and 2 from the
+  * term index (TextSearchSpec pins 2, and at most 4 over other frames).
   *
   * Case folding: [[tokens]] folds case with
   * [[graft.functions.TextFunctions.foldCase]], not `lower()`. Spark's
@@ -105,7 +122,9 @@ object TextSearch {
     * query terms must come from the same analyzer; an empty term matches
     * nothing. N and avgdl follow Lucene's docCount: every document counts,
     * zero-token ones included. Doc ids are keys: each must name one
-    * document, and a document without an id counts in N and avgdl only. */
+    * document, and a document without an id counts in N and avgdl only.
+    * A bare stored table analyzed by [[standardTokens]] or [[stemmedTokens]]
+    * is scored from its term index; every other frame in one pass. */
   def bm25(docs: DataFrame, queryTerms: Seq[String],
            idCol: String = "doc_id", textCol: String = "text",
            analyzer: Column => Column = standardTokens): DataFrame = {
@@ -116,23 +135,67 @@ object TextSearch {
     // non-empty tokens, so a pad never matches
     val real = queryTerms.filter(_.nonEmpty).distinct
     val slots = Iterator.iterate(16)(_ * 2).find(_ >= real.size).get
-    // one analyzer pass: the token array is its own projection, so the
-    // length and counts below read it instead of re-running the analyzer;
-    // only a doc holding a term gets counts (`__tfs` is null otherwise)
     val terms = typedLit(real ++ Seq.fill(slots - real.size)(""))
-    val perDoc = docs.select(col(idCol), analyzer(col(textCol)).as("__toks"))
+    // only a doc holding a term gets counts (`__tfs` is null otherwise)
+    val tfs = when(arrays_overlap(col("__words"), terms), transform(terms, t =>
+      size(col("__words")) - size(array_remove(col("__words"), t))))
+    termIndex(docs, idCol, textCol, analyzer) match {
+      case Some(ix) => ix.scores(docs.sparkSession, idCol, real, slots, tfs)
+      case None => onePass(docs, idCol, textCol, analyzer, slots, tfs)
+    }
+  }
+
+  /** One analyzer pass per document: its id, length and non-empty tokens
+    * (the token array is its own projection, so the length and counts read
+    * it instead of re-running the analyzer). */
+  private def perDoc(docs: DataFrame, idCol: String, textCol: String,
+                     analyzer: Column => Column): DataFrame =
+    docs.select(col(idCol), analyzer(col(textCol)).as("__toks"))
       .select(col(idCol), size(col("__toks")).cast("long").as("__dl"),
         array_remove(col("__toks"), "").as("__words"))
-      .select(col(idCol), col("__dl"),
-        when(arrays_overlap(col("__words"), terms), transform(terms, t =>
-          size(col("__words")) - size(array_remove(col("__words"), t)))).as("__tfs"))
+
+  /** The BM25 score of a document from its term frequencies and the terms'
+    * document frequencies, rounded to 6 decimals, or an error when `unique`
+    * is false. Each term score rounds to scale 12 and the sum stays exact: a
+    * term scores below 2.2·ln(2N+2), so decimal(24,12) cannot overflow, and
+    * re-casting after each add keeps the scale that adding decimal(38,12)
+    * values would cut to 11. */
+  private def exactScore(idCol: String, unique: Column, tfs: Column, dfs: Column,
+                         nDocs: Column, avgdl: Column): Column = {
+    val Dec = "decimal(24,12)"
+    val termScores = zip_with(tfs, dfs, { (tf, df) =>
+      val f = tf.cast("double")
+      val idf = log((nDocs - df + 0.5) / (df + 0.5) + 1.0)
+      when(tf > 0, (idf * (f * (K1 + 1.0)) /
+        (f + lit(K1) * (lit(1.0) - lit(B) + lit(B) * col("__dl") / avgdl)))
+        .cast(Dec)).otherwise(lit(0).cast(Dec))
+    })
+    val exactSum = aggregate(termScores, lit(0).cast(Dec), (acc, x) => (acc + x).cast(Dec))
+    when(unique, round(exactSum.cast("double"), 6))
+      .otherwise(raise_error(concat(lit(s"bm25: $idCol "), col(idCol).cast("string"),
+        lit(" names more than one document"))))
+      .as("text_score")
+  }
+
+  /** Any frame: each document is analyzed once into its length and the
+    * frequency of every query term; one aggregate keyed on the doc id keeps
+    * a row per matching document and folds every other document into a
+    * single null-keyed row on the map side; one global aggregate over that
+    * small result gives N, avgdl and every df, and is joined back onto the
+    * matching rows for scoring. Both consumers read the same shuffle (Spark
+    * reuses the exchange), so the analyzer — the stemmed UDF included —
+    * runs exactly once per document. */
+  private def onePass(docs: DataFrame, idCol: String, textCol: String,
+                      analyzer: Column => Column, slots: Int, tfs: Column): DataFrame = {
+    val analyzed = perDoc(docs, idCol, textCol, analyzer)
+      .select(col(idCol), col("__dl"), tfs.as("__tfs"))
     // a doc with an id that holds a query term keeps a row of its own;
     // every other doc folds into the null key map-side, so the shuffle
     // carries only the matches
     val matched = col(idCol).isNotNull && col("__tfs").isNotNull
     // (one long per slot: an array-valued aggregate would need a sort)
     val tf = (0 until slots).map(i => s"__tf$i")
-    val keyed = perDoc.groupBy(when(matched, col(idCol)).as(idCol))
+    val keyed = analyzed.groupBy(when(matched, col(idCol)).as(idCol))
       .agg(count(lit(1)).as("__n"), max(matched).as("__m") +: sum(col("__dl")).as("__dl") +:
         tf.indices.map(i => sum(col("__tfs")(i)).as(tf(i))): _*)
     // N, avgdl and each term's df from the same shuffle. Both sides read
@@ -144,33 +207,91 @@ object TextSearch {
       sum(col("__n")).cast("double").as("__n_docs"),
       (sum(col("__dl")).cast("double") / sum(col("__n"))).as("__avgdl"),
       array(tf.map(c => count_if(col("__m") && col(c) > 0).cast("double")): _*).as("__dfs"))
-
-    // each term score rounds to scale 12 and the sum stays exact: a term
-    // scores below 2.2·ln(2N+2), so decimal(24,12) cannot overflow, and
-    // re-casting after each add keeps the scale that adding decimal(38,12)
-    // values would cut to 11
-    val Dec = "decimal(24,12)"
-    val termScores = zip_with(array(tf.map(col): _*), col("__dfs"), { (tf, df) =>
-      val f = tf.cast("double")
-      val idf = log((col("__n_docs") - df + 0.5) / (df + 0.5) + 1.0)
-      when(tf > 0, (idf * (f * (K1 + 1.0)) /
-        (f + lit(K1) * (lit(1.0) - lit(B) + lit(B) * col("__dl") / col("__avgdl"))))
-        .cast(Dec)).otherwise(lit(0).cast(Dec))
-    })
-    val exactSum = aggregate(termScores, lit(0).cast(Dec), (acc, x) => (acc + x).cast(Dec))
-
     // A matching key names one document (the null key never matches), and
     // doc ids are keys, so a key naming several documents fails loudly. The
     // one stats row joins as a cartesian product: no broadcast, so no job
     // of its own
     keyed.filter(col("__m"))
       .crossJoin(stats.hint("shuffle_replicate_nl"))
-      .select(col(idCol),
-        when(col("__n") === 1, round(exactSum.cast("double"), 6))
-          .otherwise(raise_error(concat(lit(s"bm25: $idCol "), col(idCol).cast("string"),
-            lit(" names more than one document"))))
-          .as("text_score"))
+      .select(col(idCol), exactScore(idCol, col("__n") === 1, array(tf.map(col): _*),
+        col("__dfs"), col("__n_docs"), col("__avgdl")))
   }
+
+  /** The analyzed corpus of one stored file set ([[perDoc]]'s rows as a
+    * persisted RDD of catalyst rows) with its N, avgdl and the ids naming
+    * more than one document. */
+  private final class TermIndex(rows: RDD[InternalRow], schema: StructType,
+                                nDocs: Any, avgdl: Any, dups: Seq[Any]) extends AutoCloseable {
+    def close(): Unit = rows.unpersist(blocking = false)
+
+    /** Documents with an id holding each term, counted inside each
+      * partition and summed on the driver: one job, no shuffle. */
+    private def documentFrequencies(terms: Seq[String]): Seq[Long] =
+      if (terms.isEmpty) Nil
+      else rows.mapPartitions { it =>
+        val at = terms.map(UTF8String.fromString).zipWithIndex.toMap
+        val df = new Array[Long](terms.size)
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(2)) {
+            val ws = r.getArray(2)
+            (0 until ws.numElements).flatMap(j =>
+              if (ws.isNullAt(j)) None else at.get(ws.getUTF8String(j)))
+              .distinct.foreach(i => df(i) += 1)
+          }
+        }
+        Iterator(df)
+      }.collect().foldLeft(Seq.fill(terms.size)(0L))((a, b) => a.lazyZip(b).map(_ + _))
+
+    /** The matching documents' scores: a map-only pass over the index. */
+    def scores(spark: SparkSession, idCol: String, terms: Seq[String], slots: Int,
+               tfs: Column): DataFrame = {
+      val dfs = documentFrequencies(terms).map(_.toDouble) ++ Seq.fill(slots - terms.size)(0.0)
+      Bridge.frame(spark, rows, schema)
+        .select(col(idCol), col("__dl"), tfs.as("__tfs"))
+        .filter(col(idCol).isNotNull && col("__tfs").isNotNull)
+        .select(col(idCol), exactScore(idCol, !col(idCol).isin(dups: _*), col("__tfs"),
+          typedLit(dfs), lit(nDocs).cast("double"), lit(avgdl).cast("double")))
+    }
+  }
+
+  /** The term index of `docs` when it is a bare stored table and `analyzer`
+    * is one of the library's; built on first use per file set, analyzer and
+    * session ([[IndexMeta.stored]]). Its rows are an RDD, not a cached plan,
+    * so the `refreshTable` of the next store read cannot empty it, and a
+    * lost block is recomputed from the listed files. The build runs one
+    * job: the aggregate that materializes it gives N, avgdl and the
+    * duplicated ids. */
+  private def termIndex(docs: DataFrame, idCol: String, textCol: String,
+                        analyzer: Column => Column): Option[TermIndex] =
+    Seq(standardTokens -> "standard", stemmedTokens -> "stemmed")
+      .collectFirst { case (a, name) if a eq analyzer => name }
+      .flatMap { name =>
+        val spark = docs.sparkSession
+        IndexMeta.stored(docs, s"bm25 $idCol $textCol $name", spark) { d =>
+          val analyzed = perDoc(d, idCol, textCol, analyzer)
+          val idType = analyzed.schema.head.dataType
+          val rows = analyzed.queryExecution.toRdd.map(_.copy())
+            .setName(s"bm25 term index ($name)").persist(StorageLevel.MEMORY_AND_DISK)
+          try {
+            // documents and non-null lengths per id, then N, the length sum
+            // and the ids naming more than one document: one job (the
+            // aggregate compiles no code)
+            type Acc = (Long, Long, Long, List[Any]) // docs, lengths, length sum, dups
+            def add(a: Acc, b: Acc): Acc = (a._1 + b._1, a._2 + b._2, a._3 + b._3, a._4 ++ b._4)
+            val (n, lengths, dlSum, dups) = rows.map { r =>
+              val dl = if (r.isNullAt(1)) (0L, 0L) else (1L, r.getLong(1))
+              (if (r.isNullAt(0)) null else InternalRow.copyValue(r.get(0, idType)),
+                (1L, dl._1, dl._2, List.empty[Any]))
+            }.reduceByKey(add).map { case (id, (docs, l, dl, _)) =>
+              (docs, l, dl, if (id != null && docs > 1) List(id) else Nil)
+            }.fold((0L, 0L, 0L, Nil))(add)
+            // avgdl as Spark divides a long sum (null when no length) by N
+            new TermIndex(rows, analyzed.schema, n.toDouble,
+              if (lengths == 0) null else dlSum.toDouble / n,
+              dups.map(CatalystTypeConverters.convertToScala(_, idType)))
+          } catch { case NonFatal(e) => rows.unpersist(blocking = false); throw e }
+        }
+      }
 
   /** X1 search surface: BM25 top-k with deterministic tie-break — the
     * reference's `$search` + `$limit limit*2` stage shape. */

@@ -1,11 +1,56 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Attribution, Fusion}
 
 /** Driver-side sequential operators: diversity filter (V5), exact token
-  * packing (P8) — FIXTURES.md §2 vectors. */
+  * packing (P8) — FIXTURES.md §2 vectors — and the hybrid merge's
+  * driver-side order. */
 class FusionSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  test("the hybrid merge orders exactly as Spark sorts (score DESC, id ASC) on exact ties") {
+    import spark.implicits._
+    // every document has the same text and the same embedding, so both
+    // branches tie exactly and the id alone orders the rows; one NaN
+    // embedding and one zero embedding score apart from the rest
+    val same = Seq(0.6f, 0.8f, 0f)
+    def corpus[T](ids: Seq[T])(mk: Seq[(T, String, Seq[Float])] => DataFrame): DataFrame =
+      mk(ids.zipWithIndex.map { case (id, i) =>
+        (id, "spark join vector", if (i == 1) Seq(Float.NaN, 0f, 0f)
+                                  else if (i == 2) Seq(0f, 0f, 0f) else same)
+      })
+    val longs = corpus(Seq(5L, -1L, 0L, Long.MaxValue, Long.MinValue, 42L, 7L, -42L, 3L))(
+      _.toDF("id", "text", "embedding"))
+    val strings = corpus(Seq("\uE000", "a", "\uFFFD", "\uD83D\uDE00", "\uFFFF", "\uD800\uDC00",
+      "\uE000x", "", "\uDBFF\uDFFF", "z\uF8FF"))(_.toDF("id", "text", "embedding"))
+    for ((df, n) <- Seq(longs -> 9, strings -> 10); limit <- Seq(3, n)) {
+      val got = Fusion.hybridSearch(df, same.toArray, "spark", limit, "id").collect().toSeq
+      val want = spark.createDataFrame(got.asJava, got.headOption.map(_.schema).orNull)
+        .orderBy(col("score").desc, col("id").asc).collect().toSeq
+      assert(got.size === limit)
+      assert(got === want, s"limit $limit")
+      if (limit == n) {
+        // the full merge is every document, in Spark's order of the whole
+        // corpus' merged rows
+        assert(got.map(_.get(0)).toSet === df.select("id").collect().map(_.get(0)).toSet)
+      }
+    }
+    // Java's String order would put the surrogate pairs before U+E000
+    val ids = Fusion.hybridSearch(strings, same.toArray, "spark", 10, "id").collect()
+      .map(_.getString(0)).toSeq
+    assert(ids.indexOf("\uFFFF") < ids.indexOf("\uD83D\uDE00"))
+  }
 
   test("diversity filter: pass-through at <=3 results") {
     val in = Seq("a b", "a b", "a b")

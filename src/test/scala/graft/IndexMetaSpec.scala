@@ -11,7 +11,8 @@ import graft.operators.Similarity
 /** Index metadata read once per stored file set ([[IndexMeta]]): warm
   * probes run no metadata job, driver-side probe ranking equals Spark's,
   * every way a stored table can change is re-read, and [[Caches.release]]
-  * empties the memo. */
+  * empties the memo. [[Tables.load]]'s schema memo, keyed on the same
+  * listing, infers once per file set. */
 class IndexMetaSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -178,5 +179,24 @@ class IndexMetaSpec extends AnyFunSuite {
     Caches.release()
     assert(IndexMeta.size === 0)
     assert(jobs(IndexMeta.centroids(IvfCatalog.chunkCentroidsStored(spark, dir, 16))) === 1)
+  }
+
+  test("Tables.load infers a table's schema once per file set") {
+    import spark.implicits._
+    Tables.documents(spark, dir)
+    assert(jobs(Tables.documents(spark, dir)) === 0)
+    val tdir = java.nio.file.Files.createTempDirectory("graft_tables_schema").toString
+    try {
+      Seq((1L, "a")).toDF("id", "text").write.parquet(Tables.path(tdir, "extra"))
+      assert(jobs(assert(Tables.load(spark, tdir, "extra").columns.toSeq === Seq("id", "text"))) === 1)
+      assert(jobs(Tables.load(spark, tdir, "extra")) === 0)
+      // a rewritten file with an added column is inferred again
+      Seq((2L, "b", 0.5)).toDF("id", "text", "w").write.mode("overwrite")
+        .parquet(Tables.path(tdir, "extra"))
+      val again = Tables.load(spark, tdir, "extra")
+      assert(again.columns.toSeq === Seq("id", "text", "w"))
+      assert(again.collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ===
+        Seq((2L, "b", 0.5)))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tdir))
   }
 }

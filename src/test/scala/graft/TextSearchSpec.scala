@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.JobCount
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,6 +29,11 @@ import graft.operators.{Dedup, Fusion, TextSearch}
   *     caller-supplied analyzer run once per document, and a warm
   *     `search` / `hybridSearch` held to 4 / 7 Spark jobs with no cache.
   *  5. The ICU-free tokenizer against `lower()` on every code point.
+  *  6. The term index over a stored table: the same scores as the one-pass
+  *     form over the same files, warm `search` / `hybridSearch` in exactly
+  *     2 / 3 jobs, a rebuild after every write that changes the files, a
+  *     duplicated id failing only when it matches, and its blocks freed by
+  *     a replacement and by [[Caches.release]].
   */
 class TextSearchSpec extends AnyFunSuite {
 
@@ -215,5 +222,138 @@ class TextSearchSpec extends AnyFunSuite {
     info(s"warm jobs: search $search, hybridSearch $hybrid")
     assert(search.distinct.size === 1 && search.head <= 4, s"search jobs $search")
     assert(hybrid.distinct.size === 1 && hybrid.head <= 7, s"hybrid jobs $hybrid")
+  }
+
+  private def jobs(body: => Unit): Int = JobCount.of(spark.sparkContext)(body)
+
+  /** `rows` saved as the stored catalog table `name`, replacing it. */
+  private def stored(name: String, rows: DataFrame): DataFrame = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
+    rows.write.format("parquet").saveAsTable(name)
+    spark.table(name)
+  }
+
+  /** The files of stored table `name`, read as a plain parquet frame. */
+  private def filesOf(name: String): DataFrame = spark.read.parquet(
+    spark.sessionState.catalog.getTableMetadata(TableIdentifier(name)).location.toString)
+
+  private def scoreMap(df: DataFrame): Map[Any, Double] =
+    df.collect().map(r => r.get(0) -> r.getDouble(1)).toMap
+
+  private def indexBlocks: Int =
+    spark.sparkContext.getPersistentRDDs.values.count(_.name.startsWith("bm25 term index"))
+
+  test("the term index scores exactly as the one-pass form over the same files") {
+    import spark.implicits._
+    val extra = Seq[(java.lang.Long, String)](
+      (null, "spark join vector spark"), (900001L, ""), (900002L, "!!! ???"), (900003L, null),
+      (null, null), (900004L, "Spark joins vectors, searching searched searches"))
+    val name = "graft_bm25_index_parity"
+    val table = stored(name, Tables.documents(spark, dir).select("doc_id", "text")
+      .union(extra.toDF("doc_id", "text")))
+    val vocab = Tables.documents(spark, dir).select("text").as[String].take(40)
+      .flatMap(Dedup.wordsScala).distinct.toSeq
+    assert(vocab.size >= 17)
+    val queries = Seq(Seq("spark"), vocab.take(16), vocab.take(17), Nil, Seq(""),
+      Seq("zzqqxx", "nonexistentterm"), Seq("spark", "zzqqxx", "join", "vector"))
+    for (q <- queries) {
+      val want = scoreMap(TextSearch.bm25(filesOf(name), q))
+      assert(scoreMap(TextSearch.bm25(spark.table(name), q)) === want, s"query $q")
+    }
+    val stems = TextSearch.stemQueryTerms("spark join vector searching")
+    val stemmed = scoreMap(TextSearch.bm25(table, stems, analyzer = TextSearch.stemmedTokens))
+    assert(stemmed.contains(900004L))
+    assert(stemmed === scoreMap(TextSearch.bm25(filesOf(name), stems,
+      analyzer = TextSearch.stemmedTokens)))
+    assert(TextSearch.search(table, "spark join vector", 10).collect().toSeq ===
+      TextSearch.search(filesOf(name), "spark join vector", 10).collect().toSeq)
+    // warm, the scores came from the index: a df count and the scoring pass
+    assert(jobs(TextSearch.bm25(spark.table(name), Seq("spark")).collect()) === 2)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  test("over a stored table, warm search runs exactly 2 jobs and hybridSearch 3") {
+    val sdir = "/root/testdata/sf0.001"
+    // every call re-reads the store, whose refreshTable must leave the index
+    def chunks() = ChunkCatalog.flatChunks(spark, sdir)
+    val qv = chunks().select("embedding").head().getSeq[Float](0).toArray
+    def search() = TextSearch.search(chunks(), "spark join vector", 10, "chunk_id", "content")
+      .collect().toSeq
+    def hybrid() = Fusion.hybridSearch(chunks(), qv, "spark join vector", 10, "chunk_id",
+      "content", "embedding").collect().toSeq
+    search(); hybrid()
+    val counts = (Seq.fill(2)(jobs(search())), Seq.fill(2)(jobs(hybrid())))
+    info(s"warm jobs over the stored chunk table: search ${counts._1}, hybridSearch ${counts._2}")
+    assert(counts === (Seq(2, 2), Seq(3, 3)))
+    val files = spark.read.parquet(spark.sessionState.catalog.getTableMetadata(
+      TableIdentifier(TableStore.tableName("chunks", sdir))).location.toString)
+    assert(search() === TextSearch.search(files, "spark join vector", 10, "chunk_id", "content")
+      .collect().toSeq)
+    assert(hybrid() === Fusion.hybridSearch(files, qv, "spark join vector", 10, "chunk_id",
+      "content", "embedding").collect().toSeq)
+  }
+
+  test("the term index is rebuilt after every write that changes the files") {
+    import spark.implicits._
+    val name = "graft_bm25_index_fresh"
+    def check(t: String, term: String, want: Set[Long]): Unit = {
+      val got = scoreMap(TextSearch.bm25(spark.table(t), Seq("spark", term)))
+      assert(got === scoreMap(TextSearch.bm25(filesOf(t), Seq("spark", term))), s"$t $term")
+      assert(got.keySet.map(_.asInstanceOf[Long]).intersect(Set(1L, 2L, 3L)) === want, s"$t $term")
+    }
+    stored(name, Seq((1L, "spark alpha"), (2L, "beta gamma")).toDF("doc_id", "text"))
+    check(name, "alpha", Set(1L))
+    val blocks = indexBlocks
+    // an append adds a file
+    Seq((3L, "spark delta")).toDF("doc_id", "text").write.mode("append").saveAsTable(name)
+    check(name, "delta", Set(1L, 3L))
+    assert(jobs(TextSearch.bm25(spark.table(name), Seq("spark", "delta")).collect()) === 2,
+      "warm after the rebuild")
+    // an in-place rewrite
+    Seq((2L, "spark delta"), (3L, "epsilon")).toDF("doc_id", "text")
+      .write.mode("overwrite").saveAsTable(name)
+    check(name, "delta", Set(2L))
+    // a drop and rebuild
+    stored(name, Seq((1L, "delta spark spark")).toDF("doc_id", "text"))
+    check(name, "delta", Set(1L))
+    // a generation flip: another physical table of the same logical one
+    val flipped = stored(s"${name}__gen7", Seq((3L, "spark"), (2L, "delta")).toDF("doc_id", "text"))
+    check(flipped.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.catalogTable.get
+    }.get.identifier.table, "delta", Set(2L, 3L))
+    // each replaced index freed its blocks
+    assert(indexBlocks === blocks)
+    Seq(name, s"${name}__gen7").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("a duplicated id fails when it matches a query, and only then") {
+    import spark.implicits._
+    val name = "graft_bm25_index_dups"
+    val table = stored(name, Seq((1L, "alpha beta"), (1L, "gamma"), (2L, "alpha"), (3L, "epsilon"))
+      .toDF("doc_id", "text"))
+    for (q <- Seq(Seq("alpha"), Seq("gamma"))) {
+      val e = intercept[Exception](TextSearch.bm25(spark.table(name), q).collect())
+      assert(e.getMessage.contains("doc_id 1 names more than one document"), q)
+    }
+    assert(scoreMap(TextSearch.bm25(table, Seq("epsilon"))).keySet === Set(3L))
+    assert(scoreMap(TextSearch.bm25(table, Seq("epsilon"))) ===
+      scoreMap(TextSearch.bm25(filesOf(name), Seq("epsilon"))))
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  test("Caches.release() frees the term index") {
+    import spark.implicits._
+    val name = "graft_bm25_index_release"
+    stored(name, Seq((1L, "spark alpha"), (2L, "beta")).toDF("doc_id", "text"))
+    def query() = TextSearch.bm25(spark.table(name), Seq("spark")).collect()
+    query()
+    assert(indexBlocks >= 1)
+    assert(jobs(query()) === 2)
+    Caches.release()
+    assert(indexBlocks === 0)
+    assert(jobs(query()) === 3, "a release rebuilds the index: one build job, then the query")
+    spark.sql(s"DROP TABLE IF EXISTS $name")
   }
 }

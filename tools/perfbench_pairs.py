@@ -4,6 +4,7 @@
     python3 tools/perfbench_pairs.py --base HEAD --workload ingest --seeds 1-10
     python3 tools/perfbench_pairs.py --base 59b43e3 --workload serve --seeds 3 7 11 \
         --scratch /tmp/pairs --json pairs.json
+    python3 tools/perfbench_pairs.py --base HEAD --workload serve --seeds 9 --trace 1
 
 The base revision is extracted with `git archive` into a scratch directory
 (built there on its first run, like any checkout). For each seed, one
@@ -12,8 +13,10 @@ back to back; the order alternates from seed to seed, so drift on a shared
 machine does not always favour the same side. It prints every pair's
 end-to-end metrics and change/base ratio, then per metric the medians, the
 median ratio, the quartiles of the base runs and how many pairs the change
-won. A run that fails or fails its checks is reported and left out of the
-summary. Nothing under perfbench/ is written except the build outputs and
+won. With `--trace 1` the runs are traced and the metrics compared are the
+per-layer ones (`textsearch.bm25_ms`, `spark.jobs`, ...), so a pair shows
+which layer a change moved. A run that fails or fails its checks is reported
+and left out of the summary. Nothing under perfbench/ is written except the build outputs and
 scratch directories run.py itself makes (both git-ignored).
 """
 import argparse
@@ -55,10 +58,10 @@ def extract(rev, scratch):
     return sha, dest
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace):
     """One perfbench run; its metrics, or None when it failed."""
     p = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=checkout, capture_output=True, text=True, stdin=subprocess.DEVNULL)
     lines = p.stdout.strip().splitlines()
     try:
@@ -85,12 +88,15 @@ def main():
     ap.add_argument("--workload", required=True, choices=["serve", "ingest"])
     ap.add_argument("--seeds", required=True, nargs="+", help="seeds: 1 2 3, 1-10 or 1,4,9")
     ap.add_argument("--seconds", type=float, default=1)
+    ap.add_argument("--trace", type=int, choices=[0, 1], default=0,
+                    help="1: traced runs, compared on the per-layer metrics")
     ap.add_argument("--scratch", help="where the base is extracted (default: a temporary dir)")
     ap.add_argument("--json", help="also write every pair and the summary here")
     a = ap.parse_args()
     seeds = parse_seeds(a.seeds)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        better = {m["name"]: m["better"]
+                  for m in json.load(f)["per_layer" if a.trace else "end_to_end"]}
     scratch = a.scratch or tempfile.mkdtemp(prefix="perfbench_pairs_")
     sha, base_dir = extract(a.base, scratch)
     print(f"# base {a.base} = {sha[:12]} at {base_dir}; change = working tree {ROOT}")
@@ -100,7 +106,7 @@ def main():
         sides = [("base", base_dir), ("change", ROOT)]
         if i % 2:
             sides.reverse()
-        got = {name: run(path, a.workload, seed, a.seconds) for name, path in sides}
+        got = {name: run(path, a.workload, seed, a.seconds, a.trace) for name, path in sides}
         if got["base"] is None or got["change"] is None:
             print(f"seed {seed}: run failed (base {'ok' if got['base'] else 'FAILED'}, "
                   f"change {'ok' if got['change'] else 'FAILED'})")
@@ -128,7 +134,7 @@ def main():
                   f"change {way} in {wins}/{len(pairs)} pairs")
     if a.json:
         with open(a.json, "w") as f:
-            json.dump({"base": sha, "workload": a.workload, "pairs": pairs,
+            json.dump({"base": sha, "workload": a.workload, "trace": a.trace, "pairs": pairs,
                        "summary": summary}, f, indent=1)
     if not a.scratch:
         shutil.rmtree(scratch, ignore_errors=True)
