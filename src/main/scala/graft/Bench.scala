@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
-    val spark = GraftSession.dataSizedShuffle(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false"), cpus.toInt, sfDir)
-      .getOrCreate()
+    val spark = GraftSession.localBuilder(cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Per-query task counter (scaling evidence, r19 verdict item 3: the
     // c8/c32 sweep at sf0.1 is uninformative unless the grader can see how

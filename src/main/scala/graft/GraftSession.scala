@@ -3,16 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Shared shuffle-sizing defaults for the runnable surfaces (Bench, Verify,
-  * Smoke, ScaleCurve): size shuffle partitions to the DATA, not the core
+  * Smoke, ScaleBench): size shuffle partitions to the DATA, not the core
   * count. The r7 partition sweep measured 100M-event sessionization at
   * 49.8 s with core-count partitions vs 29.2 s at 256 (≈ tens of MB per
-  * partition); a manual `SPARK_GRAFT_SHUFFLE` override found that point —
-  * AQE should own it. Shuffles start wide (`initialPartitionNum`) and AQE
-  * coalesces down to the advisory byte size; `parallelismFirst=false` makes
-  * the advisory size, not core count, the coalescing target. On a cluster
-  * the same knobs govern spill behavior at every scale factor — these
-  * defaults are the "would this survive 100×" posture, applied where the
-  * driver actually measures.
+  * partition) — AQE should own that point. Shuffles start wide
+  * (`initialPartitionNum`) and AQE coalesces down to the advisory byte
+  * size; `parallelismFirst=false` makes the advisory size, not core count,
+  * the coalescing target. On a cluster the same knobs govern spill
+  * behavior at every scale factor — these defaults are the "would this
+  * survive 100×" posture, applied where the driver actually measures.
   *
   * The defaults are GATED ON INPUT SIZE: a paired A/B bench at sf0.1
   * (17.6 MB on disk) measured the wide-initial-partition configs costing
@@ -22,19 +21,13 @@ import org.apache.spark.sql.SparkSession
   * the session keeps plain core-count static partitions; at or above it
   * the data-sized configs engage. Callers pass the input directory so the
   * gate reads the actual bytes it will process.
-  *
-  * Env overrides (harness sweeps): `SPARK_GRAFT_AQE=false` → always
-  * static; `SPARK_GRAFT_AQE=true` → always data-sized;
-  * `SPARK_GRAFT_ADVISORY` → advisory partition bytes;
-  * `SPARK_GRAFT_AQE_MIN_BYTES` → the gate threshold.
   */
 object GraftSession {
 
   /** Input bytes below which the data-sized shuffle configs are a net loss
     * (measured: sf0.1 = 17.6 MB → 1.11× slower; ×1000 ≈ 176 MB → 1.7×
     * faster; 64 MB splits the decades with margin on both sides). */
-  val DataSizedMinBytes: Long =
-    sys.env.get("SPARK_GRAFT_AQE_MIN_BYTES").map(_.toLong).getOrElse(64L << 20)
+  val DataSizedMinBytes: Long = 64L << 20
 
   /** Total file bytes under `dir` (the gate's input-size estimate). */
   def dirBytes(dir: String): Long = {
@@ -53,37 +46,37 @@ object GraftSession {
   def withDiskLowWater[T](path: String)(f: => T): (T, Double) = {
     val fsFile = new java.io.File(path)
     val low = new java.util.concurrent.atomic.AtomicLong(fsFile.getUsableSpace)
-    @volatile var run = true
-    val t = new Thread(() => while (run) {
-      low.getAndUpdate(l => math.min(l, fsFile.getUsableSpace))
-      Thread.sleep(500)
-    })
+    def sample(): Unit = low.getAndUpdate(l => math.min(l, fsFile.getUsableSpace))
+    val t = new Thread(() =>
+      try while (true) { sample(); Thread.sleep(500) }
+      catch { case _: InterruptedException => () })
     t.setDaemon(true); t.start()
-    val r = try f finally { run = false; t.join(1500) }
+    val r = try f finally { t.interrupt(); t.join() }
+    sample()
     (r, low.get / 1e9)
   }
 
+  /** The runnable surfaces' local session: `local[cpus]`, the shared
+    * warehouse, no UI, shuffle partitions sized by [[dataSizedShuffle]] to
+    * what `inputDir` holds. Callers add their own confs and `getOrCreate`. */
+  def localBuilder(cpus: Int, inputDir: String): SparkSession.Builder =
+    dataSizedShuffle(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.ui.enabled", "false"), cpus, inputDir)
+
   /** Apply the shuffle-sizing defaults to a session builder. `shuffle` is
-    * the static partition count (used verbatim below the gate or when AQE
-    * is disabled; otherwise the floor under `initialPartitionNum`);
-    * `inputDir` is what the session will read — its on-disk size decides
-    * which regime applies. */
+    * the static partition count (used verbatim below the gate; otherwise
+    * the floor under `initialPartitionNum`); `inputDir` is what the session
+    * will read — its on-disk size decides which regime applies. */
   def dataSizedShuffle(b: SparkSession.Builder, shuffle: Int,
                        inputDir: String): SparkSession.Builder = {
     val base = b.config("spark.sql.shuffle.partitions", shuffle.toString)
-    sys.env.get("SPARK_GRAFT_AQE") match {
-      case Some(v) if !v.toBoolean =>
-        // explicit static control run: AQE fully off, pure static plans
-        return base.config("spark.sql.adaptive.enabled", "false")
-      case Some(_) => // explicit opt-in: fall through to the data-sized configs
-      case None if dirBytes(inputDir) < DataSizedMinBytes =>
-        return base // fixture-scale input: stock AQE, static partition count
-      case None => // at-scale input: fall through
-    }
-    base
+    if (dirBytes(inputDir) < DataSizedMinBytes)
+      base // fixture-scale input: stock AQE, static partition count
+    else base
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "32m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "32m")
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         math.max(1024, shuffle).toString)
   }

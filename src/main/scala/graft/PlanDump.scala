@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans of registered queries.
   *
   * `PlanDump` regenerates PLANS.md from the headline queries — the
@@ -40,12 +38,8 @@ object PlanDump {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     // PLANS.md keeps its fixed 4-core session; named plans follow the bench's
     val cpus = if (named) sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt else 4
-    val spark = GraftSession.dataSizedShuffle(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false"), cpus, sfDir)
-      .getOrCreate()
+    val spark = GraftSession.localBuilder(cpus, sfDir)
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def plan(name: String): String = SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)

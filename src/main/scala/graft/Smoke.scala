@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke-runner mirroring the driver's t1 check: run SparkEntry.entry on
   * sf0.001, print row count + rows. Optional arg: a query name to run+show
   * instead (on sf0.001), for quick plan/result inspection via
@@ -9,13 +7,9 @@ import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.dataSizedShuffle(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false"), cpus.toInt,
+    val spark = GraftSession.localBuilder(cpus.toInt,
         sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-      .getOrCreate()
+      .config("spark.sql.session.timeZone", "UTC").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.headOption match {
       case Some(name) =>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (optimization rounds): run a registered query once warm and
   * print per-stage wall time, task count, and the stage's name line — the
@@ -15,11 +14,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.dataSizedShuffle(SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.ui.enabled", "false"), cpus.toInt, sfDir)
-      .getOrCreate()
+    val spark = GraftSession.localBuilder(cpus.toInt, sfDir).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     case class St(var name: String = "", var tasks: Int = 0,
                   var ms: Long = 0L, var submitted: Long = 0L,

@@ -43,8 +43,7 @@ object Tables {
     * by PlanSpec); round-robin repartition sorts its input partition first
     * (spark.sql.execution.sortBeforeRepartition, default on), so the
     * row-to-partition assignment is deterministic and replay-safe. */
-  val SpreadMaxBytes: Long =
-    sys.env.get("SPARK_GRAFT_SPREAD_MAX_BYTES").map(_.toLong).getOrElse(64L << 20)
+  val SpreadMaxBytes: Long = 64L << 20
   val SpreadMinBytes: Long = 48L << 10
 
   /** Only the KERNEL corpus spreads: documents is the table every

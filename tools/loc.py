@@ -7,6 +7,8 @@ Prints four numbers for src/main (Scala sources):
               /* ... */ blocks, scaladoc included)
   mains       files that define a `def main(`
   knobs       distinct SPARK_GRAFT_* environment knobs named in the code
+and under them the names of the counted mains and knobs, so a change to
+either shows by name.
 
 Usage: python3 tools/loc.py [repo_root] [file ...]
 With file arguments (paths relative to repo_root), code_lines also prints
@@ -64,7 +66,8 @@ def main():
         os.path.dirname(os.path.abspath(__file__)))
     picked = sys.argv[2:]
     src = os.path.join(root, "src", "main")
-    lines = code = mains = 0
+    lines = code = 0
+    mains = []
     knobs = set()
     for d, _, files in os.walk(src):
         for f in sorted(files):
@@ -74,12 +77,15 @@ def main():
                 text = fh.read()
             lines += text.count("\n")
             code += code_lines(text)
-            mains += bool(re.search(r"\bdef main\(", text))
+            if re.search(r"\bdef main\(", text):
+                mains.append(os.path.splitext(f)[0])
             knobs.update(re.findall(r"SPARK_GRAFT_[A-Z0-9_]*[A-Z0-9]", text))
     print(f"lines {lines}")
     print(f"code_lines {code}")
-    print(f"mains {mains}")
+    print(f"mains {len(mains)}")
     print(f"knobs {len(knobs)}")
+    print(f"mains: {' '.join(sorted(mains))}")
+    print(f"knobs: {' '.join(sorted(knobs))}")
     if picked:
         n = 0
         for p in picked:
