@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.{Dedup, Sampling}
 
 /** The scale evidence behind SCALE.md's "Current evidence index": one leg
@@ -19,12 +20,15 @@ import graft.operators.{Dedup, Sampling}
   *    `batchTag` re-keys the ingest batch so a resumed run appends fresh
   *    documents.
   *  - `span [corpusDir [batchDocs [factor [srcDir]]]]` — substring-span
-  *    dedup and its curation chain: the stored gram counts, the per-batch
-  *    incremental flag and the in-loop fold, decontamination, the mixture
-  *    resample, the full pass sliced by [[Dedup.recommendedSpanSlices]]
-  *    (checked ≡ the monolithic pass when that fits the disk), the survivor
-  *    curation chain and scrub-in-place. `factor > 0` first generates the
-  *    corpus as ScaleGen's survivor-mode ×factor upsample of srcDir.
+  *    dedup and its curation chain: the full pass sliced by
+  *    [[Dedup.recommendedSpanSlices]] (checked ≡ the monolithic pass when
+  *    one slice fits the disk; only then are the stored gram counts, the
+  *    per-batch incremental flag and the in-loop fold run, since the counts
+  *    build shuffles the same gram table in one pass), decontamination, the
+  *    mixture resample, the curation chain and scrub-in-place. `factor > 0`
+  *    first generates the corpus as ScaleGen's survivor-mode ×factor
+  *    upsample of srcDir; `factor` 0 prices the corpus as it is (a
+  *    ScaleGen corpus is the all-near-copy fixture).
   *  - `ingest [corpusDir [nlist [batchDocs [nBatches]]]]` — the integrated
   *    document loop: chunk store, near-dup flags, span log and flags store
   *    and the durable mixture log, all folded in-loop on a 2-batch cadence.
@@ -151,6 +155,23 @@ object ScaleBench {
   /** The survivor fixture's shape (SCALE.md round 19). */
   val SurvivorDupFrac = 0.5
   val SurvivorKeepFrac = 0.7
+
+  /** Drives the document loop `start` builds over a (doc_id, text)
+    * stream, one micro-batch per `(tag, slice)`: the slice replayed as it
+    * is (the identity-dedup drop path) plus the same documents re-keyed by
+    * `stride * (tag + 1)` with `fresh<tag> ` prepended (the append path). */
+  private def feedDocLoop(spark: SparkSession, slices: Seq[(Long, Seq[(Long, String)])],
+                          stride: Long)(start: DataFrame => StreamingQuery): Unit = {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val source = MemoryStream[(Long, String)]
+    val q = start(source.toDF().toDF("doc_id", "text"))
+    try slices.foreach { case (tag, slice) =>
+      source.addData(slice ++ slice.map { case (id, text) =>
+        (id + stride * (tag + 1), s"fresh$tag $text") }: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+  }
 
   /** √chunks cells, the law every stored index here is built on. */
   private def lawNlist(nChunks: Long): Int = math.max(16, math.sqrt(nChunks.toDouble).toInt)
@@ -324,20 +345,12 @@ object ScaleBench {
     }
 
     // ------------------------------------------------- ingest batch (loop)
-    // half replayed corpus documents (the identity-dedup drop path), half
-    // re-keyed by `batchTag` (the append path)
-    val batch = ingestSlice ++ ingestSlice.map { case (id, text) =>
-      (id + 900000000000L * (batchTag + 1), s"fresh$batchTag $text")
-    }
-    val source = MemoryStream[(Long, String)]
-    val q = streaming.StreamingIngest.startDocs(
-      source.toDF().toDF("doc_id", "text"), dir,
-      out.fresh("ckpt"), nlist,
-      pqM = pqM, pqKsub = pqKsub,
-      onBatch = r => out(f"ingest batch ${r.batchId}: docs=${r.arrived} " +
-        f"chunksDropped=${r.dropped} chunksAppended=${r.appended} latency=${r.seconds}%.2f s"))
-    source.addData(batch: _*); q.processAllAvailable()
-    q.stop()
+    // re-keyed by `batchTag`, so a resumed run appends fresh documents
+    feedDocLoop(spark, Seq(batchTag -> ingestSlice), 900000000000L)(stream =>
+      streaming.StreamingIngest.startDocs(stream, dir, out.fresh("ckpt"), nlist,
+        pqM = pqM, pqKsub = pqKsub,
+        onBatch = r => out(f"ingest batch ${r.batchId}: docs=${r.arrived} " +
+          f"chunksDropped=${r.dropped} chunksAppended=${r.appended} latency=${r.seconds}%.2f s")))
 
     // --------------------------------------------------- compaction + law
     val rep = out.timed("compaction pass (dirtied cells only)") {
@@ -440,32 +453,45 @@ object ScaleBench {
     docs.filter(col("doc_id") < batchN).write.mode("overwrite").parquet(s"$scratch/batch")
     val batch = spark.read.parquet(s"$scratch/batch")
 
-    // stored counts (the ingest path's one-time corpus-shaped cost),
-    // written so the incremental flag scans real files
-    out.timed("spanGramCounts build+write")(
-      Dedup.spanGramCounts(corpus).write.mode("overwrite").parquet(s"$scratch/counts"))
-    val counts = spark.read.parquet(s"$scratch/counts")
-    out(s"store rows=${counts.count()}")
-    // the recurring ingest cost: one batch flagged against the stored
-    // counts (broadcast batch digests, narrow store scan, no shuffle)
-    val nInc = out.timed(s"incremental flag ($batchN docs)")(
-      Dedup.duplicateSpansIncremental(batch, counts).count())
-    out(s"incremental spans=$nInc")
-    // the ingest log's lifecycle: the same counts as a fragmented 24-part
-    // log (a running loop between folds), the flag against it, the
-    // in-place generational fold, and the flag again — identical flags in
-    // all three shapes (summed-threshold contract)
-    import graft.streaming.SpanDedupIngest
-    val logDir = s"$scratch/log"
-    out.timed("fragmented log write (24 parts)")(
-      counts.withColumn("batch", pmod(xxhash64(col("h")), lit(24L)))
-        .write.mode("overwrite").partitionBy("batch").parquet(logDir))
-    def flagVsLog() = Dedup.duplicateSpansIncremental(batch, SpanDedupIngest.readLog(spark, logDir)).count()
-    val nFrag = out.timed("incremental flag vs 24-part log")(flagVsLog())
-    out.timed("foldLogInLoop (in-place generational fold)")(SpanDedupIngest.foldLogInLoop(spark, logDir))
-    val nFold = out.timed("incremental flag vs folded log")(flagVsLog())
-    require(nFrag == nInc && nFold == nInc, s"flag parity across log shapes broke: $nInc/$nFrag/$nFold")
-    delete(spark, logDir)
+    // the full pass's disk budget, measured first: it also decides whether
+    // the stored counts are built, since their one-pass groupBy shuffles
+    // the same gram table the monolithic pass does
+    val nWin = out.timed("spanWindowCount (sizing scan)")(Dedup.spanWindowCount(docs))
+    val gramBytes = Dedup.estimatedSpanGramBytes(nWin)
+    val usable = new java.io.File(dir).getUsableSpace
+    val slices = Dedup.recommendedSpanSlices(gramBytes, usable)
+    out(f"auto slices: $nWin windows ~ ${gramBytes / 1e9}%.1f GB gram shuffle, " +
+      f"${usable / 1e9}%.1f GB usable -> S=$slices")
+
+    if (slices == 1) {
+      // stored counts (the ingest path's one-time corpus-shaped cost),
+      // written so the incremental flag scans real files
+      out.timed("spanGramCounts build+write")(
+        Dedup.spanGramCounts(corpus).write.mode("overwrite").parquet(s"$scratch/counts"))
+      val counts = spark.read.parquet(s"$scratch/counts")
+      out(s"store rows=${counts.count()}")
+      // the recurring ingest cost: one batch flagged against the stored
+      // counts (broadcast batch digests, narrow store scan, no shuffle)
+      val nInc = out.timed(s"incremental flag ($batchN docs)")(
+        Dedup.duplicateSpansIncremental(batch, counts).count())
+      out(s"incremental spans=$nInc")
+      // the ingest log's lifecycle: the same counts as a fragmented 24-part
+      // log (a running loop between folds), the flag against it, the
+      // in-place generational fold, and the flag again — identical flags in
+      // all three shapes (summed-threshold contract)
+      import graft.streaming.SpanDedupIngest
+      val logDir = s"$scratch/log"
+      out.timed("fragmented log write (24 parts)")(
+        counts.withColumn("batch", pmod(xxhash64(col("h")), lit(24L)))
+          .write.mode("overwrite").partitionBy("batch").parquet(logDir))
+      def flagVsLog() = Dedup.duplicateSpansIncremental(batch, SpanDedupIngest.readLog(spark, logDir)).count()
+      val nFrag = out.timed("incremental flag vs 24-part log")(flagVsLog())
+      out.timed("foldLogInLoop (in-place generational fold)")(SpanDedupIngest.foldLogInLoop(spark, logDir))
+      val nFold = out.timed("incremental flag vs folded log")(flagVsLog())
+      require(nFrag == nInc && nFold == nInc, s"flag parity across log shapes broke: $nInc/$nFrag/$nFold")
+      delete(spark, logDir)
+    } else out(s"stored counts skipped: their one-pass build shuffles the gram table, " +
+      s"which needs S=$slices passes on this disk")
 
     // decontamination: the batch as an eval set against the disjoint corpus
     // (eval digests broadcast, no corpus-wide aggregation)
@@ -479,12 +505,6 @@ object ScaleBench {
 
     // the full pass, sliced to the disk budget; when one slice fits, the
     // monolithic pass fits too and the two must flag the same spans
-    val nWin = out.timed("spanWindowCount (sizing scan)")(Dedup.spanWindowCount(docs))
-    val gramBytes = Dedup.estimatedSpanGramBytes(nWin)
-    val usable = new java.io.File(dir).getUsableSpace
-    val slices = Dedup.recommendedSpanSlices(gramBytes, usable)
-    out(f"auto slices: $nWin windows ~ ${gramBytes / 1e9}%.1f GB gram shuffle, " +
-      f"${usable / 1e9}%.1f GB usable -> S=$slices")
     val nMono =
       if (slices == 1) out.timed("monolithic duplicateSpans")(Dedup.duplicateSpans(docs).count())
       else -1L
@@ -596,7 +616,6 @@ object ScaleBench {
   def ingest(spark: SparkSession, dir: String, nlist0: Int, batchDocs: Int,
              nBatches: Int): Seq[String] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val out = new Out("ingest", dir)
     val nChunks = out.timed("chunk table (bucketed feature-pipeline output, once)")(
       ChunkCatalog.flatChunks(spark, dir).count())
@@ -608,26 +627,22 @@ object ScaleBench {
 
     val docs = Tables.documents(spark, dir)
     val mod = math.max(nBatches.toLong, docs.count() / math.max(batchDocs, 1))
-    val batches = (0 until nBatches).map { b =>
-      val slice = docs.filter(pmod($"doc_id", lit(mod)) === b)
+    val slices = (0 until nBatches).map { b =>
+      b.toLong -> docs.filter(pmod($"doc_id", lit(mod)) === b)
         .orderBy($"doc_id".asc).limit(batchDocs)
         .select($"doc_id", $"text").as[(Long, String)].collect().toSeq
-      slice ++ slice.map { case (id, text) => (id + 900000000L * (b + 1), s"fresh$b $text") }
     }
     val (spanLog, spanFlags, mixLog) = (out.fresh("spanlog"), out.fresh("spanflags"), out.fresh("mixlog"))
     val weights = Map("src0" -> 0.4, "src1" -> 0.3, "src2" -> 0.3)
-    val source = MemoryStream[(Long, String)]
-    val q = streaming.StreamingIngest.startDocs(
-      source.toDF().toDF("doc_id", "text")
-        .withColumn("source", concat(lit("src"), pmod($"doc_id", lit(3L)).cast("string"))),
-      dir, out.fresh("ckpt"), nlist, compactEvery = 2,
-      spanLogDir = spanLog, spanFlagsDir = spanFlags,
-      mixtureWeights = weights, mixtureLogDir = mixLog,
-      onMixtureAdvice = a => out(s"mixture advice: $a"),
-      onBatch = r => out(f"batch ${r.batchId}: docs=${r.arrived} chunksDropped=${r.dropped} " +
-        f"chunksAppended=${r.appended} latency=${r.seconds}%.2f s"))
-    batches.foreach { b => source.addData(b: _*); q.processAllAvailable() }
-    q.stop()
+    feedDocLoop(spark, slices, 900000000L)(stream =>
+      streaming.StreamingIngest.startDocs(
+        stream.withColumn("source", concat(lit("src"), pmod($"doc_id", lit(3L)).cast("string"))),
+        dir, out.fresh("ckpt"), nlist, compactEvery = 2,
+        spanLogDir = spanLog, spanFlagsDir = spanFlags,
+        mixtureWeights = weights, mixtureLogDir = mixLog,
+        onMixtureAdvice = a => out(s"mixture advice: $a"),
+        onBatch = r => out(f"batch ${r.batchId}: docs=${r.arrived} chunksDropped=${r.dropped} " +
+          f"chunksAppended=${r.appended} latency=${r.seconds}%.2f s")))
 
     val flags = streaming.SpanDedupIngest.readFlags(spark, spanFlags)
     out(s"span flags emitted: rows=${flags.count()} docs=${flags.select("doc_id").distinct().count()}")
